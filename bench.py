@@ -21,36 +21,26 @@ import sys
 import time
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-    # 1-min loadavg at start AND end (round-10 verdict #6): calibration
-    # is a point sample at the start; the host is bimodal WITHIN a run,
-    # so a quiet start + loaded end explains late-gate stretch that the
-    # calibration ratio alone can't.
-    load_before = os.getloadavg()
+def warm_up(spark, sf_dir: str) -> None:
+    """Touch the big tables once so JVM classloading, codegen and
+    parquet footer caching don't bill the first measured query, and run
+    one trivial Arrow-batched pandas_udf so Python worker + Arrow
+    bring-up doesn't bill the first udf-bearing query (c01 sorts first)."""
+    from pyspark.sql.functions import col, pandas_udf
 
-    from stepist_spark.queries import all_queries
-    from stepist_spark.session import get_spark, load_table
+    from stepist_spark.session import load_table
 
-    spark = get_spark(app_name="stepist_spark_bench")
-
-    # Warmup: touch the big fact table once so JVM classloading, codegen
-    # and parquet footer caching don't bill the first measured query, and
-    # run one trivial Arrow-batched pandas_udf so Python worker + Arrow
-    # bring-up doesn't bill the first udf-bearing query (c01 sorts first).
     load_table(spark, sf_dir, "lineitem").count()
     load_table(spark, sf_dir, "documents").count()
     load_table(spark, sf_dir, "embeddings").count()
-    from pyspark.sql.functions import col, pandas_udf
-
     _warm = pandas_udf(lambda s: s, "long")
     spark.range(1000).select(_warm(col("id"))).count()
 
-    # ... and one trivial streaming drain so streaming-engine bring-up
-    # (state store, streaming codegen, trigger machinery) doesn't bill
-    # the first streaming gate (s01).
+
+def warm_up_streaming(spark) -> None:
+    """One trivial streaming drain so streaming-engine bring-up (state
+    store, streaming codegen, trigger machinery) doesn't bill the first
+    streaming gate (s01)."""
     from stepist_spark.streaming.runtime import stream_shuffle_partitions
 
     src = (
@@ -71,27 +61,46 @@ def main() -> None:
             time.sleep(0.1)
         wq.stop()
 
-    # Host-calibration probe (round-8 verdict #2): the host is bimodal
-    # (identical code benched 150s quiet vs 239s contended the same
-    # morning), so cross-round comparisons need a fixed pure-CPU
-    # yardstick IN the artifact. A seeded in-memory aggregate over
-    # spark.range(50M) — no IO, no Python workers, one exchange — timed
-    # min-of-3. Normalize round-over-round totals by the ratio of their
-    # calibration_sec before reading any regression as real.
-    from pyspark.sql.functions import xxhash64
 
-    def calibrate() -> float:
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(50_000_000).select(
-                (xxhash64(col("id")) % 97).alias("k")
-            ).groupBy("k").count().collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return best
+def calibrate(spark) -> float:
+    """Host-calibration probe (round-8 verdict #2): the host is bimodal
+    (identical code benched 150s quiet vs 239s contended the same
+    morning), so cross-round comparisons need a fixed pure-CPU
+    yardstick IN the artifact. A seeded in-memory aggregate over
+    spark.range(50M) — no IO, no Python workers, one exchange — timed
+    min-of-3. Normalize round-over-round totals by the ratio of their
+    calibration_sec before reading any regression as real."""
+    from pyspark.sql.functions import col, xxhash64
 
-    calib = calibrate()
+    best = None
+    for _ in range(3):
+        t0 = time.perf_counter()
+        spark.range(50_000_000).select(
+            (xxhash64(col("id")) % 97).alias("k")
+        ).groupBy("k").count().collect()
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    return best
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+    # 1-min loadavg at start AND end (round-10 verdict #6): calibration
+    # is a point sample at the start; the host is bimodal WITHIN a run,
+    # so a quiet start + loaded end explains late-gate stretch that the
+    # calibration ratio alone can't.
+    load_before = os.getloadavg()
+
+    from stepist_spark.queries import all_queries
+    from stepist_spark.session import get_spark
+
+    spark = get_spark(app_name="stepist_spark_bench")
+
+    warm_up(spark, sf_dir)
+    warm_up_streaming(spark)
+    calib = calibrate(spark)
 
     timings: dict[str, float] = {}
     failures: dict[str, str] = {}
@@ -207,7 +216,7 @@ def main() -> None:
             # r11 inflation was invisible to the start-only sample —
             # the host entered its slow mode mid-run; sf1_smoke's
             # pre/post pair is what made that legible)
-            "calibration_post_sec": round(calibrate(), 3),
+            "calibration_post_sec": round(calibrate(spark), 3),
             "loadavg_1min": [round(load_before[0], 2), round(os.getloadavg()[0], 2)],
         }
     )

@@ -30,51 +30,17 @@ def main() -> None:
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_AB_RUNS", "3")))
     load0 = os.getloadavg()[0]
 
+    from bench import calibrate, warm_up, warm_up_streaming
     from stepist_spark.queries import all_queries
-    from stepist_spark.session import get_spark, load_table
+    from stepist_spark.session import get_spark
 
     spark = get_spark(app_name="opt_ab")
-    # same warmups as bench.py so the first gate isn't billed bring-up
-    load_table(spark, sf_dir, "lineitem").count()
-    load_table(spark, sf_dir, "documents").count()
-    load_table(spark, sf_dir, "embeddings").count()
-    from pyspark.sql.functions import col, pandas_udf, xxhash64
-
-    _warm = pandas_udf(lambda s: s, "long")
-    spark.range(1000).select(_warm(col("id"))).count()
+    # same warm-ups as bench.py so the first gate isn't billed bring-up
+    warm_up(spark, sf_dir)
     if any(n.startswith("s0") for n in names):
-        from stepist_spark.streaming.runtime import stream_shuffle_partitions
+        warm_up_streaming(spark)
 
-        src = (
-            spark.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", 10)
-            .option("startTimestamp", 0)
-            .option("advanceMillisPerBatch", 1000)
-            .load()
-        )
-        with stream_shuffle_partitions(spark, 2):
-            wq = (
-                src.groupBy().count().writeStream.format("memory")
-                .queryName("_warm_stream").outputMode("complete")
-                .trigger(processingTime="0 seconds").start()
-            )
-            deadline = time.time() + 30
-            while time.time() < deadline and not wq.recentProgress:
-                time.sleep(0.1)
-            wq.stop()
-
-    def calibrate() -> float:
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(50_000_000).select(
-                (xxhash64(col("id")) % 97).alias("k")
-            ).groupBy("k").count().collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
-    calib = calibrate()
+    calib = calibrate(spark)
     registry = all_queries()
     timings: dict[str, float] = {}
     for name in names:
@@ -90,7 +56,7 @@ def main() -> None:
         "queries": timings,
         "total": round(sum(timings.values()), 3),
         "calibration_sec": round(calib, 3),
-        "calibration_post_sec": round(calibrate(), 3),
+        "calibration_post_sec": round(calibrate(spark), 3),
         "loadavg_1min": [round(load0, 2), round(os.getloadavg()[0], 2)],
     }
     print(json.dumps(out, separators=(",", ":")))

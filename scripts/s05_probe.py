@@ -26,28 +26,15 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def calibrate(spark) -> float:
-    from pyspark.sql.functions import col, xxhash64
-
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(50_000_000).select(
-            (xxhash64(col("id")) % 97).alias("k")
-        ).groupBy("k").count().collect()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
-
-
 def main() -> None:
     m01_first = "--m01-first" in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
+    from bench import calibrate, warm_up, warm_up_streaming
     from stepist_spark.queries import PART_WALL, all_queries
     from stepist_spark.queries import streaming_gates as sg
-    from stepist_spark.session import get_spark, load_table
+    from stepist_spark.session import get_spark
 
     spark = get_spark(app_name="s05_probe")
     out: dict = {
@@ -56,35 +43,12 @@ def main() -> None:
         "loadavg_before": [round(x, 2) for x in os.getloadavg()],
     }
 
-    # bench.py's exact warmups so the first measured drain isn't billed
+    # bench.py's warm-ups so the first measured drain isn't billed
     # engine bring-up (parquet footers, codegen, Python/Arrow, streaming)
-    load_table(spark, sf_dir, "events").count()
-    load_table(spark, sf_dir, "documents").count()
-    from pyspark.sql.functions import col, pandas_udf
+    warm_up(spark, sf_dir)
+    warm_up_streaming(spark)
 
-    _warm = pandas_udf(lambda s: s, "long")
-    spark.range(1000).select(_warm(col("id"))).count()
-    from stepist_spark.streaming.runtime import stream_shuffle_partitions
-
-    src = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", 10)
-        .option("startTimestamp", 0)
-        .option("advanceMillisPerBatch", 1000)
-        .load()
-    )
-    with stream_shuffle_partitions(spark, 2):
-        wq = (
-            src.groupBy().count().writeStream.format("memory")
-            .queryName("_warm_stream").outputMode("complete")
-            .trigger(processingTime="0 seconds").start()
-        )
-        deadline = time.time() + 30
-        while time.time() < deadline and not wq.recentProgress:
-            time.sleep(0.1)
-        wq.stop()
-
-    out["calibration_sec"] = calibrate(spark)
+    out["calibration_sec"] = round(calibrate(spark), 3)
 
     registry = all_queries()
     if m01_first:
@@ -112,7 +76,7 @@ def main() -> None:
 
     out["s05_runs"] = run_gate("s05_stream_dedup", n_runs)
     out["s03_runs"] = run_gate("s03_stream_interval_join", n_runs)
-    out["calibration_sec_post"] = calibrate(spark)
+    out["calibration_sec_post"] = round(calibrate(spark), 3)
     out["loadavg_after"] = [round(x, 2) for x in os.getloadavg()]
     print(json.dumps(out, indent=1))
     spark.stop()

@@ -88,22 +88,6 @@ def build(spark, out_dir: str) -> None:
         print(f"  scaled {t} x{K}")
 
 
-def _calibration(spark) -> float:
-    """bench.py's fixed pure-CPU probe (min-of-3): records host health
-    IN the artifact so cross-run sf1 comparisons can be normalized."""
-    from pyspark.sql.functions import col, xxhash64
-
-    best = None
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(50_000_000).select(
-            (xxhash64(col("id")) % 97).alias("k")
-        ).groupBy("k").count().collect()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rebuild", action="store_true")
@@ -114,6 +98,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    from bench import calibrate
     from stepist_spark.session import get_spark, warehouse_root
 
     import __spark_entry__ as entry
@@ -128,7 +113,7 @@ def main() -> None:
         build(spark, out_dir)
         print(f"build done in {time.time() - t0:.1f}s")
 
-    calib_pre = _calibration(spark)
+    calib_pre = round(calibrate(spark), 3)
     print(f"calibration_sec (pre): {calib_pre}", flush=True)
     only = {s.strip() for s in args.only.split(",") if s.strip()}
     results: dict[str, dict] = {}
@@ -154,7 +139,7 @@ def main() -> None:
             dt = time.time() - t0
             results[name] = {"sec": round(dt, 2), "error": str(e)[:200]}
             print(f"{name:30s} {dt:7.2f}s  ERROR {str(e)[:120]}", flush=True)
-    calib_post = _calibration(spark)
+    calib_post = round(calibrate(spark), 3)
     total = sum(r["sec"] for r in results.values())
     errs = [k for k, r in results.items() if "error" in r]
     print(json.dumps({"sf": 1.0, "total_sec": round(total, 1),

@@ -20,6 +20,8 @@ a single shuffle with map-side partial aggregation — scales linearly).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -39,6 +41,10 @@ MINHASH_B = [
     201326611, 104395303, 15485863, 32452867,
 ]
 SIMHASH_BITS = 32
+# Gates build from threads (session.build_concurrently): the
+# read-length-then-append extension below must not interleave, or two
+# threads append the same index and every later coefficient shifts.
+_COEFFS_LOCK = threading.Lock()
 
 
 def ensure_minhash_coeffs(n: int) -> None:
@@ -53,12 +59,13 @@ def ensure_minhash_coeffs(n: int) -> None:
     expressions and the DuckDB oracle SQL."""
     import hashlib
 
-    while len(MINHASH_A) < n:
-        i = len(MINHASH_A)
-        ha = int(hashlib.md5(f"minhash_a:{i}".encode()).hexdigest()[:8], 16)
-        hb = int(hashlib.md5(f"minhash_b:{i}".encode()).hexdigest()[:8], 16)
-        MINHASH_A.append((ha % (1 << 30)) | 1)
-        MINHASH_B.append(hb % (1 << 30))
+    with _COEFFS_LOCK:
+        while len(MINHASH_A) < n:
+            i = len(MINHASH_A)
+            ha = int(hashlib.md5(f"minhash_a:{i}".encode()).hexdigest()[:8], 16)
+            hb = int(hashlib.md5(f"minhash_b:{i}".encode()).hexdigest()[:8], 16)
+            MINHASH_A.append((ha % (1 << 30)) | 1)
+            MINHASH_B.append(hb % (1 << 30))
 
 
 def word_hash32(col: Column) -> Column:

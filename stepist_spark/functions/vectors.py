@@ -134,10 +134,6 @@ def hyperplane_literal(p: int) -> Column:
     return F.array(*[F.lit(v) for v in HYPERPLANES[p]])
 
 
-def hyperplane_literal_sql(p: int) -> str:
-    return "[" + ", ".join(repr(v) for v in HYPERPLANES[p]) + "]"
-
-
 def lsh_bucket(vec: Column, n_planes: int = N_PLANES, offset: int = 0) -> Column:
     """Sign-LSH bucket id: bit p is 1 iff dot(vec, plane_{offset+p}) >= 0.
 
@@ -187,14 +183,6 @@ def lsh_bucket_fast(vec: Column, n_planes: int = N_PLANES) -> Column:
     # explicit scalar eval type: module-level `from __future__ import
     # annotations` stringifies hints, which the hint-based API rejects
     return pandas_udf(_bucket, "bigint")(vec)
-
-
-def lsh_bucket_sql(vec: str, n_planes: int = N_PLANES, offset: int = 0) -> str:
-    terms = []
-    for p in range(n_planes):
-        d = dot_sql(vec, hyperplane_literal_sql(offset + p))
-        terms.append(f"(CASE WHEN {d} >= 0 THEN 1::BIGINT ELSE 0::BIGINT END << {p})")
-    return "(" + " + ".join(terms) + ")"
 
 
 def band_signatures(vec: Column, n_bands: int, planes_per_band: int) -> Column:

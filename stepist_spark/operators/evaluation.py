@@ -107,54 +107,6 @@ def roc_auc(
     )
 
 
-def roc_auc_sql(
-    table_sql: str,
-    label_expr: str,
-    score_expr: str,
-    group_exprs: Optional[Sequence[str]] = None,
-) -> str:
-    """DuckDB mirror of :func:`roc_auc` — same value-counts → rank-run
-    cumulative → exact HUGEINT Mann-Whitney arithmetic, one double
-    division, 6-dp round."""
-    gexprs = list(group_exprs or [])
-    gsel = "".join(f"{g}, " for g in gexprs)
-    gby = ("GROUP BY " + ", ".join(gexprs)) if gexprs else ""
-    part = ("PARTITION BY " + ", ".join(gexprs)) if gexprs else ""
-    gby_s = (", ".join(gexprs) + ", _s") if gexprs else "_s"
-    return f"""
-WITH _rows AS (
-    SELECT {gsel}CAST(({label_expr}) AS INTEGER) AS _y,
-           ({score_expr}) AS _s
-    FROM ({table_sql})
-),
-_vc AS (
-    SELECT {gsel}_s, CAST(count(*) AS HUGEINT) AS _g,
-           CAST(sum(_y) AS HUGEINT) AS _gp
-    FROM _rows GROUP BY {gby_s}
-),
-_rk AS (
-    SELECT {gsel}_g, _gp,
-           sum(_g) OVER ({part} ORDER BY _s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - _g AS _c
-    FROM _vc
-),
-_agg AS (
-    SELECT {gsel}sum(_gp) AS _np, sum(_g) AS _n,
-           sum(_gp * (2 * _c + _g + 1)) AS _2rp
-    FROM _rk {gby}
-)
-SELECT {gsel}CAST(_np AS BIGINT) AS n_pos,
-       CAST(_n - _np AS BIGINT) AS n_neg,
-       CAST(_2rp - _np * (_np + 1) AS BIGINT) AS auc_num,
-       CAST(2 * _np * (_n - _np) AS BIGINT) AS auc_den,
-       CASE WHEN 2 * _np * (_n - _np) > 0
-            THEN round(CAST(_2rp - _np * (_np + 1) AS DOUBLE)
-                       / CAST(2 * _np * (_n - _np) AS DOUBLE), 6)
-       END AS auc
-FROM _agg
-"""
-
-
 def confusion_stats(
     df: DataFrame,
     label_col: str,
@@ -177,28 +129,6 @@ def confusion_stats(
         .groupBy(*gcols, "label", "pred")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-
-
-def confusion_stats_sql(
-    table_sql: str,
-    label_expr: str,
-    pred_expr: str,
-    group_exprs: Optional[Sequence[str]] = None,
-) -> str:
-    """DuckDB mirror of :func:`confusion_stats`."""
-    gexprs = list(group_exprs or [])
-    gsel = "".join(f"{g}, " for g in gexprs)
-    gby = ", ".join(gexprs + ["label", "pred"])
-    return f"""
-SELECT {gsel}label, pred, CAST(count(*) AS BIGINT) AS n
-FROM (
-    SELECT {gsel}CAST(({label_expr}) AS BOOLEAN) AS label,
-           CAST(({pred_expr}) AS BOOLEAN) AS pred
-    FROM ({table_sql})
-)
-WHERE label IS NOT NULL AND pred IS NOT NULL
-GROUP BY {gby}
-"""
 
 
 def calibration_bins(

@@ -269,41 +269,6 @@ def neighborhood_overlap(
     )
 
 
-def neighborhood_overlap_sql(
-    edges_sql: str,
-    src_expr: str = "src",
-    dst_expr: str = "dst",
-    min_common: int = 1,
-) -> str:
-    """DuckDB mirror of :func:`neighborhood_overlap` — same wedge
-    join, same one-division Jaccard."""
-    return f"""
-WITH no_e AS (
-    SELECT DISTINCT least({src_expr}, {dst_expr}) AS u,
-           greatest({src_expr}, {dst_expr}) AS v
-    FROM ({edges_sql}) WHERE {src_expr} <> {dst_expr}
-),
-no_adj AS (
-    SELECT u AS node, v AS nbr FROM no_e
-    UNION ALL
-    SELECT v, u FROM no_e
-),
-no_deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM no_adj GROUP BY 1),
-no_pairs AS (
-    SELECT l.node AS a, r.node AS b, CAST(count(*) AS BIGINT) AS common
-    FROM no_adj l JOIN no_adj r ON l.nbr = r.nbr AND l.node < r.node
-    GROUP BY 1, 2
-    HAVING count(*) >= {min_common}
-)
-SELECT p.a, p.b, p.common, da.deg AS deg_a, db.deg AS deg_b,
-       round(CAST(p.common AS DOUBLE)
-             / CAST(da.deg + db.deg - p.common AS DOUBLE), 6) AS jaccard
-FROM no_pairs p
-JOIN no_deg da ON p.a = da.node
-JOIN no_deg db ON p.b = db.node
-"""
-
-
 def bfs_depths(
     edges: DataFrame,
     seeds: DataFrame,
@@ -348,30 +313,6 @@ def bfs_depths(
         visited = visited.unionByName(nxt).localCheckpoint(eager=False)
         frontier = nxt
     return visited
-
-
-def bfs_depths_sql(
-    edges_sql: str,
-    seeds_sql: str,
-    max_depth: int,
-) -> str:
-    """DuckDB mirror of :func:`bfs_depths` — a recursive CTE carrying
-    (node, depth); min(depth) per node replays the visited-set rule.
-    Expects ``edges_sql`` to yield (src, dst) and ``seeds_sql`` (node).
-    UNION (not ALL) dedups (node, depth) states per round so a cyclic
-    graph cannot multiply paths — the state space is bounded |V|·depth.
-    """
-    return f"""
-WITH RECURSIVE bfs_walk(node, depth) AS (
-    SELECT node, 0 FROM ({seeds_sql}) t
-    UNION
-    SELECT e.dst, w.depth + 1
-    FROM bfs_walk w JOIN ({edges_sql}) e ON e.src = w.node
-    WHERE w.depth < {max_depth}
-)
-SELECT node, CAST(min(depth) AS BIGINT) AS depth
-FROM bfs_walk GROUP BY node
-"""
 
 
 def cheapest_paths_bounded(

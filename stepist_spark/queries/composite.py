@@ -1153,24 +1153,31 @@ def _order_graph(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def c03_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
     from stepist_spark.operators import clusters, dedup, graphs
     from stepist_spark.queries.llm_text import BANDS, N_HASHES, _docs_with_near_dups
+    from stepist_spark.session import build_concurrently
 
     corpus = _docs_with_near_dups(spark, sf)
-    # one materialization feeds clustering AND triangle counting
-    cands = dedup.minhash_lsh_candidates(
-        corpus, "doc_id", "text", N_HASHES, BANDS
-    ).localCheckpoint(eager=False)
-    # ONE orders⋈lineitem pass builds the whole trade graph (round-11
-    # optimization, guide §2.4 remove-shuffles): the weighted graph's
-    # (src, dst, w) aggregate has exactly one row per distinct pair, so
-    # the unweighted edge list is a projection of the SAME checkpointed
-    # frame — formerly _order_graph ran a second join+distinct over the
-    # fact tables for identical pairs. pagerank re-checkpoints from it,
+    # The two shared bases build concurrently and eagerly, BEFORE any
+    # family starts, so no two families race to compute the same
+    # checkpoint. One materialization of the candidates feeds
+    # clustering AND triangle counting. ONE orders⋈lineitem pass
+    # builds the whole trade graph (round-11 optimization, guide §2.4
+    # remove-shuffles): the weighted graph's (src, dst, w) aggregate
+    # has exactly one row per distinct pair, so the unweighted edge
+    # list is a projection of the SAME checkpointed frame — formerly
+    # _order_graph ran a second join+distinct over the fact tables for
+    # identical pairs. pagerank re-checkpoints from it,
     # in_degrees/bfs/kcore scan it, sssp consumes the weights.
-    wedges = _weighted_order_graph(spark, sf).localCheckpoint(eager=False)
+    cands, wedges = build_concurrently(
+        spark,
+        [
+            lambda: dedup.minhash_lsh_candidates(
+                corpus, "doc_id", "text", N_HASHES, BANDS
+            ).localCheckpoint(),
+            lambda: _weighted_order_graph(spark, sf).localCheckpoint(),
+        ],
+    )
     edges = wedges.select("src", "dst")
     seeds = (
         load_table(spark, sf, "customer")
@@ -1186,12 +1193,8 @@ def c03_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     # 1.0s, kcore 1.3s ≈ the whole 10.5s gate wall). Build them from a
     # thread pool instead so the per-round jobs of different families
     # back-fill each other's stage tails (guide §2.6, the w01/s05
-    # pattern). The shared bases are materialized FIRST (one cheap
-    # count each, concurrently) so no two families race to compute the
-    # same checkpoint. Per-family round order is unchanged
-    # (single-threaded within a family), so results are identical.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(lambda f: f.count(), (cands, wedges)))
+    # pattern). Per-family round order is unchanged (single-threaded
+    # within a family), so results are identical.
 
     def _cluster() -> DataFrame:
         return clusters.dup_clusters(cands).select(
@@ -1269,10 +1272,9 @@ def c03_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(None).cast("bigint").alias("v2"),
         )
 
-    builders = (_cluster, _pagerank, _triangle, _overlap, _bfs, _sssp, _kcore)
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = [pool.submit(b) for b in builders]
-        cl, prp, tri, no, bfs, sssp, kc = [f.result() for f in futures]
+    cl, prp, tri, no, bfs, sssp, kc = build_concurrently(
+        spark, [_cluster, _pagerank, _triangle, _overlap, _bfs, _sssp, _kcore]
+    )
     return (
         cl.unionByName(prp)
         .unionByName(tri)
@@ -1542,14 +1544,10 @@ def _cdc_fixture(spark: SparkSession, sf: str):
 def w01_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import os
 
-    from stepist_spark.operators import cdc
+    from stepist_spark.operators import cdc, layout
     from stepist_spark.queries.llm_text import t04_quality_by_source
-    from stepist_spark.session import scratch_dir
+    from stepist_spark.session import build_concurrently, scratch_dir
     from stepist_spark.sources import readers, writers
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    from stepist_spark.operators import layout
 
     # Round-11 optimization (guide §2.6 overlap-independent-jobs): the
     # gate's three filesystem side-effect stages — the partitioned
@@ -1584,13 +1582,9 @@ def w01_sink_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         ).repartition(16).write.mode("overwrite").parquet(frag_dir)
         return layout.compact_files(spark, frag_dir, target_mb=128)
 
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        _f_sink = _pool.submit(_stage_sink)
-        _f_evolve = _pool.submit(_stage_evolve)
-        _f_compact = _pool.submit(_stage_compact)
-        n_before, n_after = _f_compact.result()
-        _f_sink.result()
-        _f_evolve.result()
+    _, _, (n_before, n_after) = build_concurrently(
+        spark, [_stage_sink, _stage_evolve, _stage_compact]
+    )
 
     back = readers.read(spark, path, fmt="parquet")
     # partition columns come back LAST and (configurably) type-inferred;

@@ -291,7 +291,7 @@ FROM documents GROUP BY source
 #              independent, so it certifies the prefix-filter pruning
 #              (a dropped true pair would show as a missing row).
 def t08_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    from stepist_spark.session import spread
+    from stepist_spark.session import build_concurrently, spread
 
     corpus = _docs_with_near_dups(spark, sf)
     # ONE tokenize→shingle→16-hash signature pass feeds EVERY banding
@@ -317,8 +317,8 @@ def t08_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # 9s gate was this serial build phase). The minhash/banding chain
     # and the hashed-set chain are independent (both re-tokenize from
     # the same lazy lineage), and the ppjoin part needs only the hashed
-    # sets — so the two chains build in a 2-thread pool and ppjoin
-    # starts the moment the sets are ready, overlapping the LSH chain.
+    # sets — so the two chains build concurrently and ppjoin starts the
+    # moment the sets are ready, overlapping the LSH chain.
     def _build_lsh():
         sig16 = hashing.minhash_signature(
             shingled, "_id", "_toks", n_hashes=16
@@ -327,40 +327,29 @@ def t08_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
         # one materialization of the (id, id) candidate pairs feeds
         # every verification consumer — without it each branch re-runs
         # the band self-join
-        cands = dedup.candidates_from_banded(banded8).localCheckpoint(eager=False)
-        cands.count()  # materialize inside this thread, not at collect
+        cands = dedup.candidates_from_banded(banded8).localCheckpoint()
         return sig16, banded8, cands
 
     def _build_sets():
-        sh = shingled.select(
+        return shingled.select(
             F.col("_id").alias("_sid"),
             F.transform(F.array_distinct("_toks"), lambda t: F.xxhash64(t)).alias(
                 "_set"
             ),
-        ).localCheckpoint(eager=False)
-        sh.count()  # materialize inside this thread
-        return sh
+        ).localCheckpoint()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=3)
-    try:
-        f_lsh = pool.submit(_build_lsh)
-        f_sets = pool.submit(_build_sets)
-        sh_sets = f_sets.result()
-        # ppjoin rides the SAME hashed element universe: its flat
-        # (_sid, _h) element table is an explode of the checkpointed
-        # hashed sets — no second tokenize→shingle→hash→distinct pass
-        f_pp = pool.submit(
-            lambda: dedup.set_similarity_join(
-                corpus, "doc_id", "text", t_num=1, t_den=2, shingle_k=3,
-                elems=sh_sets.select("_sid", F.explode("_set").alias("_h")),
-            )
+    # ppjoin rides the SAME hashed element universe: its flat (_sid, _h)
+    # element table is an explode of the checkpointed hashed sets — no
+    # second tokenize→shingle→hash→distinct pass
+    def _ppjoin(sh):
+        return sh, dedup.set_similarity_join(
+            corpus, "doc_id", "text", t_num=1, t_den=2, shingle_k=3,
+            elems=sh.select("_sid", F.explode("_set").alias("_h")),
         )
-        sig16, banded8, cands = f_lsh.result()
-        pp_verified = f_pp.result()
-    finally:
-        pool.shutdown(wait=True)
+
+    (sig16, banded8, cands), (sh_sets, pp_verified) = build_concurrently(
+        spark, [_build_lsh, lambda: _ppjoin(_build_sets())]
+    )
     # token/shingle SETS off the same tokenize pass: join the pairs
     # once per set unit and derive every score (tok/shingle Jaccard,
     # both containment directions) from the shared (inter, n_a, n_b)
@@ -2362,12 +2351,12 @@ CLF_DIM = 512
 
 def t23_model_gates(spark: SparkSession, sf: str) -> DataFrame:
     from stepist_spark.operators import classifier as clf
-    from stepist_spark.session import spread
+    from stepist_spark.session import build_concurrently, spread
 
     docs = spread(load_table(spark, sf, "documents")).select("doc_id", "text", "lang")
     labeled = docs.select("text", (F.col("lang") == "en").alias("label"))
 
-    # lazy localCheckpoints (round-11 optimization, guide §2.3/§1.2):
+    # localCheckpoints (round-11 optimization, guide §2.3/§1.2):
     # the scored frame feeds SEVEN union branches (clf, auc, cm, cal,
     # auc:src*, kappa, mcnemar) and the ppl frame three — without the
     # checkpoint each branch's column pruning makes the subtrees
@@ -2377,31 +2366,19 @@ def t23_model_gates(spark: SparkSession, sf: str) -> DataFrame:
     # Round 12 (guide §2.6): the two checkpoint chains are independent
     # (classifier train→score vs bigram-LM train→perplexity) but their
     # upstream jobs ran back-to-back as blocking checkpoint
-    # materializations — build them from a 2-thread pool so the two
-    # tokenize pipelines overlap.
+    # materializations — build them concurrently so the two tokenize
+    # pipelines overlap.
     def _build_scored():
         weights = clf.train_quality_classifier(labeled, "text", "label", dim=CLF_DIM)
-        frame = clf.score_documents(
+        return clf.score_documents(
             docs, weights, "doc_id", "text", dim=CLF_DIM
-        ).localCheckpoint(eager=False)
-        frame.count()  # materialize inside this thread, not at collect
-        return frame
+        ).localCheckpoint()
 
     def _build_ppl():
         model = clf.train_bigram_lm(docs, "text")
-        frame = clf.perplexity_score(docs, model, "doc_id", "text").localCheckpoint(
-            eager=False
-        )
-        frame.count()
-        return frame
+        return clf.perplexity_score(docs, model, "doc_id", "text").localCheckpoint()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_scored = _pool.submit(_build_scored)
-        _f_ppl = _pool.submit(_build_ppl)
-        scored = _f_scored.result()
-        ppl = _f_ppl.result()
+    scored, ppl = build_concurrently(spark, [_build_scored, _build_ppl])
     c = scored.select(
         F.lit("clf").alias("part"),
         "doc_id",

@@ -1010,42 +1010,8 @@ GROUP BY band
 
 
 # --------------------------------------------------------------------------
-# q19 — as-of join: for each purchase, the user's most recent signup <= ts
-def _asof_events(
-    spark: SparkSession, sf: str, direction: str, tolerance=None
-) -> DataFrame:
-    ev = load_table(spark, sf, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    signups = ev.filter(F.col("event_type") == "signup").select("user_id", "ts")
-    joined = asof_ops.asof_join(
-        purchases,
-        signups,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_payload=[],
-        direction=direction,
-        tolerance=tolerance,
-    )
-    lag_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        F.col("asof_ts").cast("timestamp")
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("asof_ts").alias("signup_ts"),
-        lag_us.alias("lag_us"),
-        F.round("value", 2).alias("value"),
-    )
-
-
-def q19_asof_join(spark: SparkSession, sf: str) -> DataFrame:
-    return _asof_events(spark, sf, "backward")
-
-
+# q19 — as-of join oracle: for each purchase, the user's most recent
+# signup <= ts. The Spark side is q18's 'asof' part (asof_join_multi).
 Q19_SQL = """
 WITH p AS (SELECT event_id, user_id, ts::TIMESTAMP AS ts, value FROM events WHERE event_type = 'purchase'),
      s AS (SELECT user_id, ts::TIMESTAMP AS ts FROM events WHERE event_type = 'signup')

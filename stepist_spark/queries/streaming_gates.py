@@ -140,7 +140,7 @@ def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
 #   reducer_engine.py:21-44`), driver-certified (round-3 VERDICT #2).
 def s02_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     from stepist_spark.queries import record_part_wall
-    from stepist_spark.session import load_table
+    from stepist_spark.session import build_concurrently, load_table
     from stepist_spark.streaming.barrier import barrier_reduce
     from stepist_spark.streaming.runtime import (
         state_store_provider,
@@ -200,11 +200,7 @@ def s02_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
             )
         return tev
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fb, _ft = _pool.submit(_stage_barrier), _pool.submit(_stage_topk)
-        counts, tev = _fb.result(), _ft.result()
+    counts, tev = build_concurrently(spark, [_stage_barrier, _stage_topk])
     if not counts:
         # degenerate dataset (custom sf with no user_id % 8 == 0 rows):
         # fail loudly with context instead of min() of an empty dict
@@ -959,7 +955,7 @@ def _await_concurrent(
 
 def s05_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     from stepist_spark.queries import record_part_wall
-    from stepist_spark.session import load_table
+    from stepist_spark.session import build_concurrently, load_table
     from stepist_spark.streaming.dedup import stream_dedup
     from stepist_spark.streaming.incremental import dedup_against_history
     from stepist_spark.streaming.runtime import stream_shuffle_partitions
@@ -978,8 +974,6 @@ def s05_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     # and share no lineage, so their writes run from a small thread
     # pool instead of back-to-back; every stream still starts only
     # after ALL staging has completed, exactly as before.
-    from concurrent.futures import ThreadPoolExecutor
-
     ev = (
         load_table(spark, sf, "events")
         .filter(F.col("user_id") % 4 == 2)
@@ -1033,13 +1027,7 @@ def s05_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
             e3.filter(F.col("event_id") % 2 == 1), udir, "b.parquet", _MTIME0 + 60
         )
 
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        for _fut in [
-            _pool.submit(_stage_restart),
-            _pool.submit(_stage_incr),
-            _pool.submit(_stage_upsert),
-        ]:
-            _fut.result()
+    build_concurrently(spark, [_stage_restart, _stage_incr, _stage_upsert])
 
     # ---- start all four pipelines, drain concurrently ----------------------
     def start_run():

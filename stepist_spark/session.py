@@ -10,13 +10,48 @@ timezone so results are comparable across engines.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable, Sequence
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 # Shuffle-partition default: ~cores locally. On a real cluster this is
 # overridden (or left to AQE's coalescing, which shrinks post-shuffle
 # partitions to `advisoryPartitionSizeInBytes` automatically).
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+# Runtime-settable confs every query path depends on, applied even when
+# the caller (e.g. the external driver) built its own SparkSession with
+# different builder-time settings. All are dynamic SQL confs.
+_RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # InferFiltersFromGenerate duplicates the generator expression
+    # into a pre-Generate filter. For interpreted higher-order
+    # expressions (tokenize->shingle pipelines) that filter re-runs
+    # the whole expression tree per row — and lands BELOW the
+    # repartition, on the raw scan's few partitions. Measured 10×+
+    # slowdown on the LSH path; the rows it would skip (empty
+    # arrays) are a vanishing fraction of a text corpus.
+    # EliminateWindowPartitions (Spark 4) folds constant window
+    # partition keys away, silently turning our EXPLICIT
+    # bounded-frame windows (Window.partitionBy(lit(0)) over
+    # provably-tiny frames — see operators/cumulative.whole_frame)
+    # back into unpartitioned windows. Excluding it keeps the
+    # explicit key, so any remaining "WARN WindowExec: No Partition
+    # Defined" in a log is a REAL unbounded single-task window, not
+    # an annotated bounded one.
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate,"
+        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions"
+    ),
+}
 
 
 def get_spark(
@@ -32,44 +67,20 @@ def get_spark(
     the pandas-UDF escape hatch pays batch — not per-row — serde costs.
     """
     n = cpus or _DEFAULT_CPUS
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.default.parallelism", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # InferFiltersFromGenerate duplicates the generator expression
-        # into a pre-Generate filter. For interpreted higher-order
-        # expressions (tokenize->shingle pipelines) that filter re-runs
-        # the whole expression tree per row — and lands BELOW the
-        # repartition, on the raw scan's few partitions. Measured 10×+
-        # slowdown on the LSH path; the rows it would skip (empty
-        # arrays) are a vanishing fraction of a text corpus.
-        # EliminateWindowPartitions (Spark 4) folds constant window
-        # partition keys away, silently turning our EXPLICIT
-        # bounded-frame windows (Window.partitionBy(lit(0)) over
-        # provably-tiny frames — see operators/cumulative.whole_frame)
-        # back into unpartitioned windows. Excluding it keeps the
-        # explicit key, so any remaining "WARN WindowExec: No Partition
-        # Defined" in a log is a REAL unbounded single-task window, not
-        # an annotated bounded one.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate,"
-            "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions",
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    conf = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.default.parallelism": str(n),
+        **_RUNTIME_CONF,
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # 128 MiB input splits — the at-scale default; at 100 TB this
         # yields ~800k map tasks, the right granularity for 1000 execs.
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder.master(f"local[{n}]").appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -108,25 +119,6 @@ def scratch_dir(spark: SparkSession, name: str) -> str:
     return path
 
 
-# Runtime-settable confs every query path depends on, applied even when
-# the caller (e.g. the external driver) built its own SparkSession with
-# different builder-time settings. All are dynamic SQL confs.
-_RUNTIME_CONF = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # see get_spark: InferFiltersFromGenerate is pathological for
-    # interpreted HOF pipelines; EliminateWindowPartitions erases the
-    # explicit lit(0) bounded-frame window annotation
-    "spark.sql.optimizer.excludedRules": (
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate,"
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions"
-    ),
-}
-
-
 def ensure_runtime_tuning(spark: SparkSession) -> None:
     """Idempotently apply the engine's dynamic confs to any session.
 
@@ -142,6 +134,26 @@ def ensure_runtime_tuning(spark: SparkSession) -> None:
         except Exception:  # non-settable on some deployments: keep going
             pass
     spark.conf.set("spark.stepist.tuned", "1")
+
+
+def build_concurrently(
+    spark: SparkSession, thunks: Sequence[Callable[[], Any]]
+) -> list:
+    """Run independent plan-building thunks from a small thread pool.
+
+    A ``localCheckpoint`` on an AQE plan runs its upstream jobs while
+    the plan is being BUILT, so independent build chains (a Hub's
+    branches, a gate's families) overlap only when they build from
+    threads. Each thunk runs under ``inheritable_thread_target``, so its
+    jobs carry the caller's job group and local properties. Results come
+    back in thunk order; once every thread has finished, the error of the
+    first failing thunk (in thunk order) is re-raised. Four workers cover
+    every caller: the widest builds seven families, the rest give each
+    thunk a thread.
+    """
+    with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
@@ -260,9 +272,7 @@ def stream_events(spark: SparkSession, sf_dir: str):
 #: ~2× FASTER on 8 cores than 32 (r11 verdict #7). Deriving the target
 #: from input SIZE (capped at defaultParallelism) removes that floor
 #: while staying a no-op at real scale, where the cap always binds.
-_SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", str(64 * 1024))
-)
+_SPREAD_BYTES_PER_TASK = 64 * 1024
 
 
 def spread(df, min_partitions: int | None = None):
@@ -295,15 +305,12 @@ def spread(df, min_partitions: int | None = None):
     if n_inputs >= target:
         return df
     if files and min_partitions is None:
-        total = 0
-        for f in files:
-            path = f[7:] if f.startswith("file://") else f
-            try:
-                total += os.path.getsize(path)
-            except OSError:
-                total = None  # non-local path — keep the parallelism target
-                break
-        if total is not None:
+        # inputFiles() returns URIs ('file:///a/sp%20ace/x.parquet'):
+        # decode them, or the size probe misses every quoted path
+        uris = [urlparse(f) for f in files]
+        # a remote filesystem (hdfs://, s3a://) keeps the parallelism target
+        if all(u.scheme in ("", "file") for u in uris):
+            total = sum(os.path.getsize(unquote(u.path)) for u in uris)
             target = min(target, max(1, -(-total // _SPREAD_BYTES_PER_TASK)))
     if n_inputs >= target:
         return df

@@ -717,6 +717,36 @@ class TestExtendedMinhashFamily:
             assert a[i] == (ha % (1 << 30)) | 1
             assert b[i] == hb % (1 << 30)
 
+    def test_concurrent_extension_matches_serial(self):
+        # gates build from threads: extensions racing from a family
+        # truncated back to the 12 seeds must give the serial list
+        import sys
+        import threading
+
+        hashing.ensure_minhash_coeffs(256)
+        serial_a, serial_b = hashing.MINHASH_A[:256], hashing.MINHASH_B[:256]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)  # switch threads as often as possible
+        try:
+            for _ in range(5):
+                del hashing.MINHASH_A[12:], hashing.MINHASH_B[12:]
+                start = threading.Barrier(8, timeout=30)
+
+                def extend():
+                    start.wait()
+                    hashing.ensure_minhash_coeffs(256)
+
+                threads = [threading.Thread(target=extend) for _ in range(8)]
+                for t in threads:
+                    t.start()
+                for t in threads:
+                    t.join(timeout=30)
+                    assert not t.is_alive()
+                assert hashing.MINHASH_A == serial_a
+                assert hashing.MINHASH_B == serial_b
+        finally:
+            sys.setswitchinterval(interval)
+
     def test_extended_index_spark_formula(self, spark):
         h = 987654321
         df = spark.createDataFrame([(h,)], "h long")
