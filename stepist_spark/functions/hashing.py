@@ -104,10 +104,8 @@ def minhash_signature(
 
     Output: ``id_col, mh0..mh{n-1}``.
     """
-    from stepist_spark.session import spread
-
     ensure_minhash_coeffs(n_hashes)
-    tok = spread(df).select(id_col, F.explode(F.col(tokens_col)).alias("_tok"))
+    tok = df.select(id_col, F.explode(F.col(tokens_col)).alias("_tok"))
     # materialize the base hash ONCE per token: aggregate expressions get
     # no common-subexpression elimination, so inlining word_hash32 into
     # every min() would run the md5 n_hashes times per row
@@ -144,9 +142,7 @@ def simhash(df: DataFrame, id_col: str, tokens_col: str, bits: int = SIMHASH_BIT
     by `bits` before the first (partial) aggregation; for 100 TB runs
     prefer bits=32 and pre-aggregate token counts per doc first.
     """
-    from stepist_spark.session import spread
-
-    tok = spread(df).select(id_col, F.explode(F.col(tokens_col)).alias("_tok"))
+    tok = df.select(id_col, F.explode(F.col(tokens_col)).alias("_tok"))
     tok = tok.withColumn("_h", word_hash32(F.col("_tok")))
     bitted = tok.select(
         id_col, "_h", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("_b")

@@ -133,20 +133,20 @@ def banded_signatures(
     :func:`minhash_lsh_candidates_between` (incremental new-vs-base
     dedup); at deployment scale the BASE corpus's banded table is the
     persistent index written to parquet once and reused per increment.
-    """
-    from stepist_spark.session import spread
 
+    The shingle build and per-shingle hashing are the CPU-dense part and
+    run on the partitioning ``df`` arrives with: the caller spreads the
+    corpus where it reads it (``session.spread``), or a small scan's 1-2
+    input partitions serialize them.
+    """
     rows_per_band = n_hashes // bands
     if rows_per_band * bands != n_hashes:
         raise ValueError("bands must divide n_hashes")
-    # spread BEFORE the shingle projection: the array build + per-shingle
-    # hashing is the CPU-dense part, and a small scan's 1-2 input
-    # partitions would otherwise serialize it.
     # Two projections on purpose: shingles() references its token array
     # k+ times inside interpreted lambda bodies, so the tokens MUST be a
     # bound column — inlining the tokenizer expression would re-run the
     # regex split per shingle element (measured ~10× slowdown).
-    toked = spread(df).select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk"))
+    toked = df.select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk"))
     toks = toked.select(
         "_id", hashing.shingles(F.col("_tk"), shingle_k).alias("_toks")
     )
@@ -350,9 +350,7 @@ def jaccard_pairs(
     relative to |docs|²) candidate set, computes |A∩B| / |A∪B| with
     JVM array intrinsics. Output: ``id_a, id_b, jaccard`` (≥ threshold).
     """
-    from stepist_spark.session import spread
-
-    toked = spread(df).select(F.col(id_col).alias("_sid"), tokens(F.col(text_col)).alias("_tk"))
+    toked = df.select(F.col(id_col).alias("_sid"), tokens(F.col(text_col)).alias("_tk"))
     unit = hashing.shingles(F.col("_tk"), shingle_k) if shingle_k else F.col("_tk")
     sets = toked.select("_sid", F.array_distinct(unit).alias("_set"))
     joined = (
@@ -416,11 +414,7 @@ def containment_pairs(
     division per direction). Output: ``id_a, id_b, contain_a_in_b,
     contain_b_in_a``.
     """
-    from stepist_spark.session import spread
-
-    toked = spread(df).select(
-        F.col(id_col).alias("_sid"), tokens(F.col(text_col)).alias("_tk")
-    )
+    toked = df.select(F.col(id_col).alias("_sid"), tokens(F.col(text_col)).alias("_tk"))
     unit = hashing.shingles(F.col("_tk"), shingle_k) if shingle_k else F.col("_tk")
     sets = toked.select("_sid", F.array_distinct(unit).alias("_set"))
     joined = (
@@ -473,21 +467,16 @@ def set_similarity_join(
 
     Output: ``id_a, id_b, jaccard`` with id_a < id_b.
 
-    ``elems``: optional pre-built flat ``(_sid, _h)`` element table
-    (one row per DISTINCT xxhash64-hashed set element per doc — e.g.
-    an explode of a caller's already-hashed set arrays). Skips this
-    operator's own tokenize→hash→distinct pass; hash-identical results
-    by construction (the reuse-contract discipline of the
-    rank-statistics family).
+    ``elems``: optional pre-built flat ``(_sid, _h)`` element table of
+    xxhash64-hashed set elements per doc — e.g. an explode of a caller's
+    already-hashed set arrays. Skips this operator's own tokenize→hash
+    pass. The operator dedups the element table on both paths, so a
+    repeated caller element cannot inflate a set's length.
     """
     if not (0 < t_num <= t_den):
         raise ValueError("threshold must satisfy 0 < t_num/t_den <= 1")
-    from stepist_spark.session import spread
-
     if elems is None:
-        toked = spread(df).select(
-            F.col(id_col).alias("_sid"), tokens(F.col(text_col)).alias("_tk")
-        )
+        toked = df.select(F.col(id_col).alias("_sid"), tokens(F.col(text_col)).alias("_tk"))
         unit = (
             hashing.shingles(F.col("_tk"), shingle_k) if shingle_k else F.col("_tk")
         )
@@ -501,8 +490,8 @@ def set_similarity_join(
         # candidate pairs.
         elems = toked.select("_sid", F.explode(unit).alias("_t")).select(
             "_sid", F.xxhash64("_t").alias("_h")
-        ).distinct()
-    elems = elems.localCheckpoint(eager=False)
+        )
+    elems = elems.distinct().localCheckpoint(eager=False)
     lens = elems.groupBy("_sid").agg(F.count(F.lit(1)).alias("_len"))
     dfreq = elems.groupBy("_h").agg(F.count(F.lit(1)).alias("_df"))
     from pyspark.sql import Window
@@ -664,11 +653,9 @@ def fingerprint_docs(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> D
     """Shingle fingerprint: min 32-bit hash over k-word shingles plus a
     whole-document md5 — a compact near-dup / containment signature.
     Documents shorter than k tokens fingerprint to NULL min-shingle."""
-    from stepist_spark.session import spread
-
     # tokens bound as a column first — see minhash_lsh_candidates: the
     # shingle lambdas would otherwise re-tokenize per element
-    toked = spread(df).withColumn("_tk", tokens(F.col(text_col)))
+    toked = df.withColumn("_tk", tokens(F.col(text_col)))
     sh = hashing.shingles(F.col("_tk"), k)
     min_shingle = F.array_min(F.transform(sh, lambda s: hashing.word_hash32(s)))
     return toked.select(

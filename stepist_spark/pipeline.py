@@ -304,8 +304,6 @@ class Step:
         out = self.transform(df)
         if self.next_step is None:
             result = FlowResult({self.name: out})
-        elif isinstance(self.next_step, Hub):
-            result = self.next_step(out)
         else:
             result = self.next_step(out)
         if self.save_result and self.name not in result:

@@ -291,8 +291,9 @@ FROM documents GROUP BY source
 #              independent, so it certifies the prefix-filter pruning
 #              (a dropped true pair would show as a missing row).
 def t08_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    from stepist_spark.session import build_concurrently, spread
+    from stepist_spark.session import build_concurrently
 
+    # spread once, where the corpus is read (_docs_with_near_dups)
     corpus = _docs_with_near_dups(spark, sf)
     # ONE tokenize→shingle→16-hash signature pass feeds EVERY banding
     # in this gate (round-11 optimization; guide §1.2 "don't compute
@@ -305,7 +306,7 @@ def t08_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # 16h) plus a fifth tokenize for the set statistics — the before
     # plan scanned documents 38×, the after plan reads the signature
     # checkpoint (equivalence pinned by tests/test_lsh_reuse.py).
-    toked = spread(corpus).select(
+    toked = corpus.select(
         F.col("doc_id").alias("_sid"), TX.tokens(F.col("text")).alias("_tk")
     )
     shingled = toked.select(
@@ -587,7 +588,10 @@ def _edit_names(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def t09_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
+    from stepist_spark.session import spread
+
+    # one spread feeds both operators: the two branches reuse its exchange
+    docs = spread(load_table(spark, sf, "documents"))
     sh = dedup.simhash_docs(docs, "doc_id", "text")
     fp = dedup.fingerprint_docs(docs, "doc_id", "text", k=3)
     fpart = sh.join(fp, "doc_id").select(

@@ -149,10 +149,13 @@ def build_concurrently(
     back in thunk order; once every thread has finished, the error of the
     first failing thunk (in thunk order) is re-raised. Four workers cover
     every caller: the widest builds seven families, the rest give each
-    thunk a thread.
+    thunk a thread. With ``PYSPARK_PIN_THREAD=false`` there are no
+    thread-local properties to carry and the thunks run unwrapped.
     """
+    wrap = inheritable_thread_target(spark)  # the session itself when unpinned
+    targets = thunks if wrap is spark else [wrap(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+        futures = [pool.submit(t) for t in targets]
     return [f.result() for f in futures]
 
 
@@ -275,7 +278,7 @@ def stream_events(spark: SparkSession, sf_dir: str):
 _SPREAD_BYTES_PER_TASK = 64 * 1024
 
 
-def spread(df, min_partitions: int | None = None):
+def spread(df):
     """Round-robin repartition ONLY when the input is under-partitioned.
 
     CPU-dense operators (per-shingle hashing, per-token scoring) choke
@@ -284,27 +287,24 @@ def spread(df, min_partitions: int | None = None):
     the scan already has thousands of partitions and this is a no-op —
     it never *reduces* partitioning.
 
+    Call it where a gate reads its source, never inside an operator: the
+    probe sees only the input FILES, not a repartition already in the
+    plan, so spreading an already-spread frame plans another shuffle.
+
     The fan-out target is SIZE-ADAPTIVE: one partition per
     ``_SPREAD_BYTES_PER_TASK`` input bytes, capped at
-    ``defaultParallelism`` (callers that know better pass
-    ``min_partitions`` and skip the size heuristic).
+    ``defaultParallelism``.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    files: list[str] | None
-    try:
-        # cheap under-partitioning proxy: input file count. Avoids the
-        # full plan→RDD conversion getNumPartitions() would force; errs
-        # toward repartitioning (a small shuffle) when files are few
-        # but large, and no-ops when the scan already fans out.
-        files = df.inputFiles()
-        n_inputs = len(files)
-    except Exception:
-        files = None
-        n_inputs = df.rdd.getNumPartitions()
-    if n_inputs >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    # cheap under-partitioning proxy: input file count ([] for frames
+    # with no file scan). Avoids the full plan→RDD conversion
+    # getNumPartitions() would force; errs toward repartitioning (a
+    # small shuffle) when files are few but large, and no-ops when the
+    # scan already fans out.
+    files = df.inputFiles()
+    if len(files) >= target:
         return df
-    if files and min_partitions is None:
+    if files:
         # inputFiles() returns URIs ('file:///a/sp%20ace/x.parquet'):
         # decode them, or the size probe misses every quoted path
         uris = [urlparse(f) for f in files]
@@ -312,7 +312,7 @@ def spread(df, min_partitions: int | None = None):
         if all(u.scheme in ("", "file") for u in uris):
             total = sum(os.path.getsize(unquote(u.path)) for u in uris)
             target = min(target, max(1, -(-total // _SPREAD_BYTES_PER_TASK)))
-    if n_inputs >= target:
+    if len(files) >= target:
         return df
     return df.repartition(target)
 

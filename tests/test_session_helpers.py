@@ -1,12 +1,19 @@
-"""session.py helpers: the concurrent-build seam and spread()'s size probe."""
+"""session.py helpers: the concurrent-build seam and spread(), which is
+called where a gate reads its source and nowhere else."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import threading
 import time
 
 import pytest
+from pyspark.sql import functions as F
 
+import stepist_spark
+from stepist_spark import session
+from stepist_spark.operators import dedup
 from stepist_spark.session import build_concurrently, spread
 
 
@@ -51,6 +58,12 @@ class TestBuildConcurrently:
             build_concurrently(spark, [slow_fail, fast_fail, slow_ok])
         assert finished.is_set()
 
+    def test_runs_unwrapped_when_threads_are_not_pinned(self, spark, monkeypatch):
+        # with PYSPARK_PIN_THREAD=false, inheritable_thread_target hands
+        # back what it was given: here the session, which is not callable
+        monkeypatch.setattr(session, "inheritable_thread_target", lambda f=None: f)
+        assert build_concurrently(spark, [lambda: "a", lambda: "b"]) == ["a", "b"]
+
 
 def test_spread_sizes_percent_encoded_paths(spark, tmp_path):
     # inputFiles() returns URIs, so a directory named 'sp ace' comes back
@@ -62,3 +75,41 @@ def test_spread_sizes_percent_encoded_paths(spark, tmp_path):
         small = spark.read.parquet(path)
         assert small.rdd.getNumPartitions() == 1
         assert spread(small).rdd.getNumPartitions() == 1, name
+
+
+class TestSpreadAtTheSource:
+    def test_operators_and_functions_never_spread(self):
+        # spread() sees only input files, not a repartition already in the
+        # plan: an operator that spreads its input re-shuffles a spread frame
+        pkg = pathlib.Path(stepist_spark.__file__).parent
+        offenders = []
+        for sub in ("functions", "operators"):
+            for path in sorted((pkg / sub).rglob("*.py")):
+                for node in ast.walk(ast.parse(path.read_text())):
+                    if isinstance(node, ast.alias):  # an import
+                        name = node.name
+                    elif isinstance(node, ast.Name):
+                        name = node.id
+                    elif isinstance(node, ast.Attribute):  # session.spread
+                        name = node.attr
+                    else:
+                        continue
+                    if name == "spread":
+                        offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+        assert offenders == []
+
+    def test_banded_signatures_plans_one_round_robin(self, spark, tmp_path):
+        # one parquet file over 2 x 64 KiB: spread() repartitions it on
+        # any session with 2+ cores, and the operator must not add more
+        path = str(tmp_path / "docs")
+        words = [F.md5((F.col("id") * 7 + i).cast("string")) for i in range(8)]
+        spark.range(3000).select(
+            F.col("id").alias("doc_id"), F.concat_ws(" ", *words).alias("text")
+        ).coalesce(1).write.parquet(path)
+        (data,) = pathlib.Path(path).glob("*.parquet")
+        assert data.stat().st_size > 128 * 1024
+        out = dedup.banded_signatures(spread(spark.read.parquet(path)), "doc_id", "text")
+        assert len(out.collect()) == 3000 * 4  # one row per (doc, band)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("RoundRobinPartitioning") == 1, final

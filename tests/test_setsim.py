@@ -69,6 +69,17 @@ class TestSetSimilarityJoin:
         got = _run(spark, ["", "   ", "a b", "a b"])
         assert set(got) == {(2, 3)}
 
+    def test_repeated_caller_elements_count_once(self, spark):
+        # doc 1 = {1..10} with element 1 repeated 15 times, doc 2 = {1..10}:
+        # J = 1. Undeduped, doc 1's length reads 25 and the length filter
+        # (t * 25 > 10) drops the pair
+        rows = [(1, 1)] * 15 + [(sid, h) for sid in (1, 2) for h in range(1, 11)]
+        elems = spark.createDataFrame(rows, "_sid bigint, _h bigint")
+        got = set_similarity_join(
+            _docs(spark, ["", ""]), "doc_id", "text", 1, 2, elems=elems
+        ).collect()
+        assert [tuple(r) for r in got] == [(1, 2, 1.0)]
+
     def test_invalid_threshold(self, spark):
         try:
             set_similarity_join(_docs(spark, ["a"]), "doc_id", "text", 3, 2)
