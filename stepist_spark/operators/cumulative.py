@@ -125,7 +125,7 @@ def require_groups(group_cols, fn: str, alternative: str) -> list:
 
 
 #: Materialization strategies for the cumulative-input frame.
-_MATERIALIZE = ("localCheckpoint", "persist", "none")
+_MATERIALIZE = ("localCheckpoint", "none")
 
 
 def _ranged_by(
@@ -136,22 +136,14 @@ def _ranged_by(
     # materialization each pass recomputes the whole upstream plan
     # (measured: q25's KS/PSI parts tripled when the CDF inputs were
     # re-derived per pass). Default: a lazy localCheckpoint caches the
-    # input on first touch — fastest in local mode, but the blocks are
-    # executor-local with lineage TRUNCATED, so on a real cluster an
-    # executor loss mid-query kills the job. Cluster deployments pass
-    # materialize='persist' (MEMORY_AND_DISK keeps lineage — a lost
-    # block recomputes instead of failing) or 'none' when the caller
-    # already materialized the frame.
+    # input on first touch; 'none' when the caller already
+    # materialized the frame or reads the output exactly once.
     if materialize not in _MATERIALIZE:
         raise ValueError(
             f"materialize must be one of {_MATERIALIZE}, got {materialize!r}"
         )
     if materialize == "localCheckpoint":
         df = df.localCheckpoint(eager=False)
-    elif materialize == "persist":
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     cols = [F.col(c).asc() for c in order_cols]
     return (
         df.repartitionByRange(*cols)
@@ -186,9 +178,8 @@ def ordered_cumsum(
     key must uniquely identify rows (see module docstring).
 
     ``materialize``: how the multi-pass input frame is cached —
-    ``'localCheckpoint'`` (default; fastest, lineage-truncating),
-    ``'persist'`` (MEMORY_AND_DISK, executor-loss-safe for cluster
-    deployments), or ``'none'`` (caller already materialized).
+    ``'localCheckpoint'`` (default; lazy, lineage-truncating) or
+    ``'none'`` (caller already materialized).
     """
     ocols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
     with_pid = _ranged_by(df, ocols, materialize)

@@ -22,9 +22,6 @@ from pyspark.sql import functions as F
 from stepist_spark.functions import hashing
 from stepist_spark.functions.text import tokens
 
-# most recent persisted banded-signature frame (see minhash_lsh_candidates);
-# unpersisting an in-use frame is safe — Spark recomputes from lineage
-_LAST_BANDED: list = []
 
 
 def lsh_candidate_probability(s: float, n_hashes: int, bands: int) -> float:
@@ -186,7 +183,7 @@ def candidates_from_banded(banded: DataFrame) -> DataFrame:
     """Distinct ``id_a < id_b`` candidate pairs from a banded table —
     the self-join tail of :func:`minhash_lsh_candidates`, exposed so a
     caller holding a shared banded/signature frame can skip the
-    tokenize+hash rebuild (caller is responsible for persisting the
+    tokenize+hash rebuild (caller is responsible for checkpointing the
     upstream; the skew story is the parent's)."""
     left = banded.alias("l")
     right = banded.alias("r")
@@ -233,7 +230,7 @@ def minhash_lsh_candidates_between(
     :func:`minhash_lsh_candidates`, but the band match is an equi-join
     BETWEEN the two frames' banded tables, so only the new batch pays
     the tokenize+hash pass per increment — pass ``base_banded=`` (a
-    persisted/parquet-written :func:`banded_signatures` table) and the
+    checkpointed/parquet-written :func:`banded_signatures` table) and the
     base corpus is never rescanned. Ids need not be disjoint across
     frames; a shared id is treated as two distinct documents (no
     self-pair suppression across frames — an id collision between a
@@ -313,24 +310,14 @@ def minhash_lsh_candidates(
 
     ensure_runtime_tuning(df.sparkSession)
 
-    # persist the banded signatures: the self-join would otherwise
+    # checkpoint the banded signatures: the self-join would otherwise
     # recompute the whole tokenize->shingle->hash pipeline for BOTH
     # sides. The banded frame is bands rows/doc of (id, small struct) —
-    # tiny relative to the corpus — and spills to disk if not. Each
-    # call releases the previous call's cache (bounded at one pinned
-    # frame per session, instead of leaking one per invocation).
-    from pyspark.storagelevel import StorageLevel
-
+    # tiny relative to the corpus; the ContextCleaner frees its blocks
+    # once the frame is garbage.
     banded = banded_signatures(
         df, id_col, text_col, n_hashes=n_hashes, bands=bands, shingle_k=shingle_k
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    prev = _LAST_BANDED.pop(0) if _LAST_BANDED else None
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _LAST_BANDED.append(banded)
+    ).localCheckpoint(eager=False)
     return candidates_from_banded(banded)
 
 
@@ -752,7 +739,7 @@ def token_windows(
     """Hashed k-token windows: ``<id_col>, _start (1-based), _h``.
 
     The shared first stage of :func:`duplicate_spans` /
-    :func:`cut_duplicate_spans` — build it ONCE (persist it, or write
+    :func:`cut_duplicate_spans` — build it ONCE (localCheckpoint it, or write
     it to parquet at corpus scale) and pass it to both via
     ``windows=`` so detection, stats, and cutting pay the corpus
     tokenize+hash pass a single time.
@@ -801,7 +788,7 @@ def duplicate_spans(
     |tokens| on one machine). The dup-hash set joins back by the same
     key (never collected/broadcast — it is unbounded), and span
     merging is a per-doc sorted fold over that doc's own hit
-    positions, bounded by document length. Pass a persisted
+    positions, bounded by document length. Pass a checkpointed
     :func:`token_windows` frame via ``windows=`` to amortize the
     corpus pass across detection and cutting.
     """

@@ -14,9 +14,6 @@ from pyspark.sql import functions as F
 
 from stepist_spark.functions import vectors as V
 
-# one-slot pinned cache for the banded-signature frame (same bounded
-# release pattern as operators.dedup._LAST_BANDED)
-_LAST_VBANDED: list = []
 
 
 def lsh_band_signatures(
@@ -312,24 +309,15 @@ def embedding_near_dups(
     8-plane table; widen further (r=24-32) as N grows. True near-dups
     (cosine → 1) agree on almost every plane, so they still collide in
     at least one of the 4 bands with high probability. The banded
-    frame is persisted for the self-join (one pinned slot, previous
-    frame released — same discipline as dedup's _LAST_BANDED).
+    frame is checkpointed (lazily) for the self-join, the same idiom
+    as dedup's minhash_lsh_candidates.
     """
-    from pyspark.storagelevel import StorageLevel
-
     c = corpus.select(
         F.col(id_col).alias("_id"), V.to_double(F.col(vec_col)).alias("_v")
     )
     banded = lsh_band_signatures(
         corpus, id_col, vec_col, n_bands, planes_per_band
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    prev = _LAST_VBANDED.pop(0) if _LAST_VBANDED else None
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _LAST_VBANDED.append(banded)
+    ).localCheckpoint(eager=False)
     a = banded.alias("a")
     b = banded.alias("b")
     cands = (

@@ -144,12 +144,9 @@ def skew_report(
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_rows"))
     # the top-n branch and the grand-total branch both consume the
-    # SAME |keys|-row counts table — persist it so the raw frame is
-    # aggregated once, not once per consumer (round-7 ADVICE); Spark's
-    # ContextCleaner unpins the blocks when the frame is GC'd
-    from pyspark import StorageLevel
-
-    counts = counts.persist(StorageLevel.MEMORY_AND_DISK)
+    # SAME |keys|-row counts table — checkpoint it so the raw frame is
+    # aggregated once, not once per consumer (round-7 ADVICE)
+    counts = counts.localCheckpoint(eager=False)
     top = counts.orderBy(
         F.col("n_rows").desc(), *[F.col(k).asc() for k in keys]
     ).limit(top_n)

@@ -13,29 +13,24 @@ Here the unit of data is a DataFrame, not a record: a Step is a lazy
 ``DataFrame -> DataFrame`` transformation, chaining composes one
 Catalyst plan (so column pruning / predicate pushdown span the whole
 flow — the reference's kwargs-pruning, `stepist/flow/utils.py:30-45`,
-is subsumed by Catalyst), Hub persists the upstream once and applies
-each branch to it, the Reducer is a ``groupBy().agg(collect_list())``,
-and StopFlowFlag is translated to a declarative ``filter``.
+is subsumed by Catalyst), Hub applies each branch to the upstream it
+is given, the Reducer is a ``groupBy().agg(collect_list())``, and
+StopFlowFlag is translated to a declarative ``filter``.
 
-Scale notes: nothing here collects to the driver; Hub uses
-``persist()`` (MEMORY_AND_DISK) so a fan-out over 100 TB spills instead
-of recomputing the upstream N times; the reducer is a single shuffle
-with map-side partial aggregation.
+Scale notes: nothing here collects to the driver and nothing here
+materializes — a flow whose upstream is expensive to recompute per Hub
+branch checkpoints it at the source (``localCheckpoint``); the reducer
+is a single shuffle with map-side partial aggregation.
 """
 
 from __future__ import annotations
 
 import functools
-import logging
-import threading
 from collections.abc import Callable, Sequence
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
-logger = logging.getLogger(__name__)
 
 
 class StopFlowFlag(Exception):
@@ -69,178 +64,33 @@ class FlowResult(dict):
             raise AttributeError(item) from exc
 
 
-# most recent Hub-pinned upstream (module-wide one-slot cache, same
-# bounded-release discipline as operators.dedup._LAST_BANDED): each Hub
-# invocation releases the previous pin, so repeated Hub flows in a
-# long-lived session hold at most ONE cached upstream instead of
-# growing the block manager without bound. Unpersisting an in-use frame
-# is safe — Spark recomputes from lineage. Guarded by _HUB_LOCK: two
-# driver threads building Hub flows concurrently (a normal Spark
-# pattern) must not race the pop/unpersist/append sequence.
-_HUB_PINNED: list = []
-_HUB_LOCK = threading.RLock()
-
-
-# True while a Hub is running its column-pruning probe: nested Hubs see
-# it and build plans WITHOUT persisting/pinning (a probe must not
-# mutate the one-slot cache or double-persist). THREAD-LOCAL: one
-# thread's probe must not suppress another thread's persist.
-class _ProbeState(threading.local):
-    active: bool = False
-
-
-_PROBING = _ProbeState()
-
-
 class Hub:
     """Fan one upstream DataFrame out to N successor branches.
 
     Reference: `stepist/flow/steps/hub.py:5-14` (deep-copied record per
     branch, `stepist/flow/steps/next_step.py:49`) — DataFrames are
-    immutable so isolation is free; we persist the upstream so branches
-    share one computation instead of re-reading the lineage N times.
+    immutable so isolation is free, and like the reference the Hub
+    caches nothing: each branch is applied to the upstream it is given,
+    so Catalyst prunes every branch's scan to the columns that branch
+    uses. An upstream that is expensive to recompute per branch is
+    materialized at its source (``localCheckpoint``), as the gates do.
 
     Branch results merge into one FlowResult; on key collision the
     later branch wins — the reference's ``dict.update`` merge semantics
     (`stepist/flow/steps/next_step.py:50-54`), documented here
     explicitly per SURVEY.md §7.4.
-
-    Cache lifecycle: each invocation pins its upstream and releases the
-    previously pinned one (module-wide one-slot — bounded even across
-    many Hub instances); call :meth:`release` to drop the current pin
-    eagerly, e.g. after collecting the fan-out results.
-
-    Cache WIDTH: persisting blocks Catalyst from pruning columns
-    through the cache boundary — an InMemoryRelation stores every
-    column it was built with, so a naive ``persist()`` of a 100 TB
-    fact table caches all N columns to serve two single-column
-    aggregates. The Hub therefore narrows the upstream BEFORE
-    persisting: pass ``columns=[...]`` to pin the projection
-    explicitly, or let the Hub infer it — branches are applied once
-    unpersisted (pure plan construction, nothing executes) and the
-    union of upstream attributes referenced anywhere in their analyzed
-    plans becomes the cached projection. Name-collision with other
-    relations in a branch only widens the projection (safe). A
-    single-branch Hub skips persisting entirely — there is no reuse to
-    buy.
     """
 
-    def __init__(
-        self,
-        *steps: "Step",
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        columns: Sequence[str] | None = None,
-    ):
+    def __init__(self, *steps: "Step"):
         if not steps:
             raise ValueError("Hub needs at least one branch step")
         self.steps = list(steps)
-        self.storage_level = storage_level
-        self.columns = list(columns) if columns else None
-        self._pinned: DataFrame | None = None
-
-    @staticmethod
-    def _referenced_columns(upstream: DataFrame, probes: list["FlowResult"]) -> list[str] | None:
-        """Upstream columns referenced anywhere in the branch plans,
-        from the analyzed-plan JSON (every AttributeReference node name,
-        intersected with the upstream schema). Returns None — meaning
-        "don't prune" — on any introspection failure."""
-        import json
-
-        upstream_cols = set(upstream.columns)
-        seen: set[str] = set()
-
-        def walk(node) -> None:
-            if isinstance(node, dict):
-                if "AttributeReference" in str(node.get("class", "")) and "name" in node:
-                    seen.add(node["name"])
-                for k, v in node.items():
-                    # a plan node's "output" field enumerates EVERY
-                    # attribute the node produces (a leaf relation lists
-                    # its whole schema there) — only expression fields
-                    # (projectList, condition, aggregateExpressions, …)
-                    # witness actual USE of a column
-                    if k != "output":
-                        walk(v)
-            elif isinstance(node, list):
-                for v in node:
-                    walk(v)
-
-        try:
-            for res in probes:
-                for out in res.values():
-                    walk(json.loads(out._jdf.queryExecution().analyzed().toJSON()))
-                    # a branch's OWN output columns are delivered to the
-                    # caller — an upstream column that passes straight
-                    # through (e.g. the branch is only a filter/sort/
-                    # limit) is never referenced by any expression node
-                    # yet must survive the pruning
-                    seen.update(set(out.columns) & upstream_cols)
-        except Exception:
-            return None
-        cols = [c for c in upstream.columns if c in seen]
-        return cols if cols and set(cols) != upstream_cols else None
 
     def __call__(self, df: DataFrame) -> FlowResult:
-        if len(self.steps) == 1:
-            # nothing to share — persisting would only cost storage
-            return FlowResult(self.steps[0](df))
-        if _PROBING.active:
-            # we are inside an OUTER Hub's pruning probe ON THIS THREAD:
-            # this call is plan construction only — no probing of our
-            # own, no persist, no pin (a probe must not mutate cache
-            # state)
-            out = FlowResult()
-            for branch in self.steps:
-                out.update(branch(df))
-            return out
-        if self.columns:
-            df = df.select(*self.columns)
-        else:
-            # branches run once unpersisted purely to ANALYZE their
-            # plans. The flag suppresses persist/pin in nested Hubs;
-            # note that branch fns with their own construction-time
-            # side effects (registering Observations, eager writes)
-            # will still see this extra invocation — pass columns=[...]
-            # explicitly to skip the probe for such flows.
-            logger.debug(
-                "Hub pruning probe invokes branch functions twice; pass "
-                "columns=[...] if branches have construction-time side effects"
-            )
-            _PROBING.active = True
-            try:
-                probes = [branch(df) for branch in self.steps]
-            finally:
-                _PROBING.active = False
-            pruned = self._referenced_columns(df, probes)
-            if pruned:
-                df = df.select(*pruned)
-        df = df.persist(self.storage_level)
-        with _HUB_LOCK:
-            prev = _HUB_PINNED.pop(0) if _HUB_PINNED else None
-            if prev is not None and prev is not df:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            _HUB_PINNED.append(df)
-        self._pinned = df
         out = FlowResult()
         for branch in self.steps:
             out.update(branch(df))
         return out
-
-    def release(self) -> None:
-        """Eagerly unpersist this Hub's most recent pinned upstream
-        (blocking, so storage is actually freed on return)."""
-        if self._pinned is not None:
-            try:
-                self._pinned.unpersist(blocking=True)
-            except Exception:
-                pass
-            with _HUB_LOCK:
-                # identity comparison: DataFrame.__eq__ builds a Column
-                _HUB_PINNED[:] = [x for x in _HUB_PINNED if x is not self._pinned]
-            self._pinned = None
 
     def union(self, df: DataFrame) -> DataFrame:
         """Alternative fan-out/fan-in: run branches and union the result
@@ -378,24 +228,23 @@ class ReducerStep(Step):
 
     def transform(self, df: DataFrame) -> DataFrame:
         payload = self.payload_cols or [c for c in df.columns if c not in self.group_key]
-        collected = df.groupBy(*self.group_key).agg(
+        # Completeness barrier: only fire for full groups. An int is a
+        # global N; a str names a column carrying per-group N (the
+        # reference encodes N in the hub_job_id suffix), read in the
+        # same aggregate — a null N never equals the count, so its
+        # group is dropped.
+        n = self.expected_count
+        aggs = [
             F.collect_list(F.struct(*payload)).alias("job_list"),
             F.count(F.lit(1)).alias("_n"),
-        )
-        if self.expected_count is not None:
-            # Completeness barrier: only fire for full groups. An int is
-            # a global N; a str names a column carrying per-group N
-            # (the reference encodes N in the hub_job_id suffix).
-            if isinstance(self.expected_count, int):
-                collected = collected.filter(F.col("_n") == F.lit(self.expected_count))
-            else:
-                expected = df.groupBy(*self.group_key).agg(
-                    F.max(F.col(self.expected_count)).alias("_expected")
-                )
-                collected = collected.join(expected, self.group_key).filter(
-                    F.col("_n") == F.col("_expected")
-                ).drop("_expected")
-        collected = collected.drop("_n")
+        ]
+        if isinstance(n, str):
+            aggs.append(F.max(F.col(n)).alias("_expected"))
+        collected = df.groupBy(*self.group_key).agg(*aggs)
+        if n is not None:
+            expected = F.col("_expected") if isinstance(n, str) else F.lit(n)
+            collected = collected.filter(F.col("_n") == expected)
+        collected = collected.drop("_n", "_expected")
         if self.reduce_fn is not None:
             if self.reduce_schema is None:
                 raise ValueError("reduce_fn requires reduce_schema (output schema DDL)")

@@ -19,9 +19,13 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+# error conditions of a history read that mean "nothing ingested yet"
+_NO_HISTORY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def dedup_against_history(
@@ -57,11 +61,16 @@ def dedup_against_history(
         ).drop("_rn")
         # probe history through Spark, not the driver's local filesystem
         # — history_dir may be s3://-style storage where os.path never
-        # matches and a silent probe failure would disable deduplication
+        # matches. Only "no history yet" (missing or empty directory:
+        # the first epoch) means no history; any other read failure (a
+        # corrupt file, lost permissions) re-raises, because swallowing
+        # it would append the whole batch undeduplicated.
         try:
             seen = spark.read.parquet(history_dir)
             has_history = "content_hash" in seen.columns
-        except Exception:  # path does not exist yet: first epoch
+        except AnalysisException as exc:
+            if exc.getCondition() not in _NO_HISTORY:
+                raise
             has_history = False
         if has_history:
             hashed = hashed.join(seen, hashed["_h"] == seen["content_hash"], "left_anti")

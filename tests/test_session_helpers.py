@@ -1,5 +1,6 @@
 """session.py helpers: the concurrent-build seam and spread(), which is
-called where a gate reads its source and nowhere else."""
+called where a gate reads its source and nowhere else; and the one way
+the library materializes a frame (localCheckpoint)."""
 
 from __future__ import annotations
 
@@ -13,8 +14,9 @@ from pyspark.sql import functions as F
 
 import stepist_spark
 from stepist_spark import session
-from stepist_spark.operators import dedup
-from stepist_spark.session import build_concurrently, spread
+from stepist_spark.operators import dedup, similarity, skew
+from stepist_spark.pipeline import Hub, Step
+from stepist_spark.session import build_concurrently, load_table, spread
 
 
 class TestBuildConcurrently:
@@ -113,3 +115,43 @@ class TestSpreadAtTheSource:
         plan = out._jdf.queryExecution().executedPlan().toString()
         final = plan.split("== Initial Plan ==")[0]
         assert final.count("RoundRobinPartitioning") == 1, final
+
+
+class TestMaterializeAtTheSource:
+    def test_persist_only_in_incremental(self):
+        # persist() needs a known release point; the streaming batch's
+        # try/finally is the only one, everything else localCheckpoints
+        pkg = pathlib.Path(stepist_spark.__file__).parent
+        offenders = []
+        for path in sorted(pkg.rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("persist", "cache")
+                ):
+                    offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+        assert [o.split(":")[0] for o in offenders] == ["streaming/incremental.py"], offenders
+
+    def test_operators_leave_the_cache_manager_empty(self, spark, sf_dir):
+        # a persisted frame stays registered with the CacheManager until
+        # someone unpersists it, across runs; a localCheckpoint does not
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        li = load_table(spark, sf_dir, "lineitem")
+        docs = load_table(spark, sf_dir, "documents")
+        emb = load_table(spark, sf_dir, "embeddings")
+        runs = {
+            "Hub.union": lambda: Hub(
+                Step(lambda d: d.groupBy("l_returnflag").count(), name="c"),
+                Step(lambda d: d.agg(F.sum("l_quantity").alias("q")), name="q"),
+            ).union(li),
+            "skew_report": lambda: skew.skew_report(li, "l_suppkey"),
+            "minhash_lsh_candidates": lambda: dedup.minhash_lsh_candidates(
+                docs, "doc_id", "text"
+            ),
+            "embedding_near_dups": lambda: similarity.embedding_near_dups(emb),
+        }
+        for name, run in runs.items():
+            run().collect()
+            assert cache.isEmpty(), name

@@ -15,6 +15,7 @@ import json
 import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from stepist_spark.pipeline import Pipeline
@@ -365,6 +366,46 @@ class TestIncrementalDedup:
         assert kept == {1: "alpha", 2: "beta", 5: "gamma"}, kept
         hist = {r["content_hash"] for r in spark.read.parquet(hist_dir).collect()}
         assert len(hist) == 3
+
+    def test_empty_history_dir_is_no_history(self, spark, tmp_path):
+        """An existing but empty history directory (created ahead of the
+        first epoch) means nothing was ingested yet, not a failure."""
+        from stepist_spark.streaming.incremental import dedup_against_history
+
+        src_dir, hist_dir = tmp_path / "in", tmp_path / "hist"
+        src_dir.mkdir()
+        hist_dir.mkdir()
+        (src_dir / "b0.json").write_text(json.dumps({"doc_id": 1, "text": "alpha"}))
+        out_dir = str(tmp_path / "out")
+        src = read_stream(spark, "json", str(src_dir), schema="doc_id LONG, text STRING")
+        _drain(dedup_against_history(
+            src, out_dir, str(hist_dir), str(tmp_path / "ck"),
+            trigger={"availableNow": True},
+        ))
+        assert [r["doc_id"] for r in spark.read.parquet(out_dir).collect()] == [1]
+
+    def test_unreadable_history_fails_the_batch(self, spark, tmp_path):
+        """A history that exists but cannot be read must stop the query:
+        treating it as "no history yet" would append every row of the
+        batch undeduplicated."""
+        from stepist_spark.streaming.incremental import dedup_against_history
+
+        src_dir, hist_dir = tmp_path / "in", tmp_path / "hist"
+        src_dir.mkdir()
+        hist_dir.mkdir()
+        (hist_dir / "part-0.parquet").write_bytes(b"not a parquet file")
+        (src_dir / "b0.json").write_text(json.dumps({"doc_id": 1, "text": "alpha"}))
+        out_dir = tmp_path / "out"
+        src = read_stream(spark, "json", str(src_dir), schema="doc_id LONG, text STRING")
+        q = dedup_against_history(
+            src, str(out_dir), str(hist_dir), str(tmp_path / "ck"),
+            trigger={"availableNow": True},
+        )
+        with pytest.raises(StreamingQueryException):
+            q.awaitTermination(120)
+        assert not q.isActive
+        assert q.exception() is not None
+        assert not list(out_dir.glob("*.parquet"))
 
 
 class TestLateData:
