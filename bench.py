@@ -41,7 +41,7 @@ def warm_up_streaming(spark) -> None:
     """One trivial streaming drain so streaming-engine bring-up (state
     store, streaming codegen, trigger machinery) doesn't bill the first
     streaming gate (s01)."""
-    from stepist_spark.streaming.runtime import stream_shuffle_partitions
+    from stepist_spark.streaming.runtime import stop_when, stream_shuffle_partitions
 
     src = (
         spark.readStream.format("rate-micro-batch")
@@ -56,10 +56,7 @@ def warm_up_streaming(spark) -> None:
             .queryName("_warm_stream").outputMode("complete")
             .trigger(processingTime="0 seconds").start()
         )
-        deadline = time.time() + 30
-        while time.time() < deadline and not wq.recentProgress:
-            time.sleep(0.1)
-        wq.stop()
+        stop_when(wq, bool, 30)
 
 
 def calibrate(spark) -> float:

@@ -6,7 +6,8 @@ judge checks plan claims against these files).
 Streaming gates (s01-s05) execute drains inside the gate FUNCTION;
 their returned DataFrame is a read of an already-materialized sink, so
 a plan dump is not meaningful — they are skipped here and documented
-via PART_WALL offsets / LAST_PROGRESS micro-batch shapes instead.
+via PART_WALL offsets (streaming.runtime.drain) and micro-batch shapes
+from a StreamingQueryListener (scripts/s05_probe.py) instead.
 
 Usage:
     python scripts/dump_plans.py before            # every batch gate

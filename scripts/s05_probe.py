@@ -11,8 +11,9 @@ Usage:
 
 Prints one JSON document with: loadavg before/after, calibration_sec
 (min-of-3, bench.py's exact probe), per-run s05 gate wall + PART_WALL
-offsets + micro-batch shapes (batch count, trigger ms, state rows), and
-the s03 sibling control. Run each permutation in its OWN process (fresh
+offsets + micro-batch shapes keyed by query id (input rows, addBatch
+and trigger ms, state rows/bytes per batch, from a
+StreamingQueryListener), and the s03 sibling control. Run each permutation in its OWN process (fresh
 JVM) on a quiet host; never concurrently with another Spark session.
 """
 
@@ -32,11 +33,13 @@ def main() -> None:
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     from bench import calibrate, warm_up, warm_up_streaming
+    from perfbench.tracer import make_listener
     from stepist_spark.queries import PART_WALL, all_queries
-    from stepist_spark.queries import streaming_gates as sg
     from stepist_spark.session import get_spark
 
     spark = get_spark(app_name="s05_probe")
+    listener = make_listener()
+    spark.streams.addListener(listener)
     out: dict = {
         "m01_first": m01_first,
         "sf_dir": sf_dir,
@@ -59,17 +62,30 @@ def main() -> None:
     def run_gate(name: str, runs: int) -> list[dict]:
         results = []
         for _ in range(runs):
-            sg.LAST_PROGRESS.clear()
+            seen = len(listener.events)
             t0 = time.perf_counter()
             registry[name].spark(spark, sf_dir).collect()
             wall = round(time.perf_counter() - t0, 3)
+            n = -1
+            while n != len(listener.events):  # let queued progress events land
+                n = len(listener.events)
+                time.sleep(0.5)
+            progress: dict[str, list[dict]] = {}
+            for _ts, qid, rows, add_s, trig_s, st_rows, st_bytes in listener.events[seen:]:
+                progress.setdefault(qid, []).append(
+                    {
+                        "numInputRows": rows,
+                        "addBatchMs": round(add_s * 1000),
+                        "triggerMs": round(trig_s * 1000),
+                        "stateRows": st_rows,
+                        "stateMemory": st_bytes,
+                    }
+                )
             results.append(
                 {
                     "wall": wall,
                     "part_wall": dict(PART_WALL.get(name, {})),
-                    "progress": {
-                        k: v for k, v in sg.LAST_PROGRESS.items()
-                    },
+                    "progress": progress,
                 }
             )
         return results

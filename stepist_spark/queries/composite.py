@@ -19,7 +19,6 @@ machinery itself:
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,8 +26,6 @@ from pyspark.sql import functions as F
 
 from stepist_spark.queries import QuerySpec
 from stepist_spark.session import load_table
-
-_SINK_IDS = itertools.count()
 
 
 # --------------------------------------------------------------------------
@@ -733,18 +730,17 @@ Q36_SQL = _q36_sql()
 #   row set visibly differs.
 def s01_streaming_hourly(spark: SparkSession, sf: str) -> DataFrame:
     import datetime
-    import time as _time
 
     from stepist_spark.queries import record_part_wall
     from stepist_spark.queries.streaming_gates import (
         _SINK_IDS,
-        _await_concurrent,
         fresh_scratch,
         stage_part,
         _MTIME0,
     )
     from stepist_spark.session import stream_events
-    from stepist_spark.streaming.runtime import stream_shuffle_partitions
+    from stepist_spark.streaming import StreamFlow
+    from stepist_spark.streaming.runtime import drain, stream_shuffle_partitions
     from stepist_spark.streaming.windows import tumbling_agg
 
     # The three certifications are INDEPENDENT pipelines — round-11
@@ -839,35 +835,11 @@ def s01_streaming_hourly(spark: SparkSession, sf: str) -> DataFrame:
     lsink = f"s01_late_{next(_SINK_IDS)}"
     esink = f"s01_enrich_{next(_SINK_IDS)}"
     with stream_shuffle_partitions(spark, 8):
-        t0 = _time.perf_counter()
-        starts: dict[str, float] = {}
-        starts["hourly"] = _time.perf_counter() - t0
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        starts["late"] = _time.perf_counter() - t0
-        q2 = (
-            lagg.writeStream.format("memory")
-            .queryName(lsink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        starts["enrich"] = _time.perf_counter() - t0
-        q3 = (
-            eagg.writeStream.format("memory")
-            .queryName(esink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        part_wall = _await_concurrent(
-            {"hourly": q, "late": q2, "enrich": q3}, t0, starts=starts
-        )
+        part_wall = drain({
+            "hourly": lambda: StreamFlow(agg).to_memory(sink, "complete"),
+            "late": lambda: StreamFlow(lagg).to_memory(lsink),
+            "enrich": lambda: StreamFlow(eagg).to_memory(esink, "complete"),
+        })
     record_part_wall("s01_streaming_hourly", part_wall)
 
     ntz = spark.table(sink).schema["window_start"].dataType.simpleString()

@@ -34,11 +34,11 @@ streaming machinery itself, not just the window expression:
 
 from __future__ import annotations
 
+import functools
 import glob
 import itertools
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,23 +46,6 @@ from pyspark.sql import functions as F
 from stepist_spark.queries import QuerySpec
 
 _SINK_IDS = itertools.count()
-
-# Per-query micro-batch summaries from the most recent _await_concurrent
-# drain, keyed by part name — overwritten per call; read by
-# scripts/s05_probe.py-style regression probes, never by gates.
-LAST_PROGRESS: dict[str, list[dict]] = {}
-
-
-def _progress_dict(rp) -> dict:
-    """Normalize a StreamingQueryProgress (object or raw JSON string —
-    the PySpark return type changed across versions) to a plain dict."""
-    import json as _json
-
-    if isinstance(rp, dict):
-        return rp
-    if isinstance(rp, str):
-        return _json.loads(rp)
-    return _json.loads(rp.json)
 
 
 def fresh_scratch(spark: SparkSession, name: str) -> str:
@@ -116,13 +99,6 @@ def stage_part(part_path: str, dest: str, mtime: float) -> str:
 # works — only the ORDER matters to the source)
 _MTIME0 = 1_600_000_000.0
 
-def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
-    """File-source stream over the events table — footer-aware ts
-    handling (NANOS-as-long vs native µs) via session.stream_events."""
-    from stepist_spark.session import stream_events
-
-    return stream_events(spark, sf)
-
 
 # --------------------------------------------------------------------------
 # s02 — two stateful-grouping certifications in one tag-union gate:
@@ -140,12 +116,10 @@ def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
 #   reducer_engine.py:21-44`), driver-certified (round-3 VERDICT #2).
 def s02_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     from stepist_spark.queries import record_part_wall
-    from stepist_spark.session import build_concurrently, load_table
+    from stepist_spark.session import build_concurrently, load_table, stream_events
+    from stepist_spark.streaming import StreamFlow
     from stepist_spark.streaming.barrier import barrier_reduce
-    from stepist_spark.streaming.runtime import (
-        state_store_provider,
-        stream_shuffle_partitions,
-    )
+    from stepist_spark.streaming.runtime import drain, stream_shuffle_partitions
     from stepist_spark.streaming.topk import latest_topk, stream_topk
     from stepist_spark.streaming.windows import session_agg, sliding_agg
 
@@ -220,7 +194,7 @@ def s02_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     # 'slide': overlapping event-time windows in complete mode vs the
     # batch grid oracle.
     agg = sliding_agg(
-        _events_stream(spark, sf),
+        stream_events(spark, sf),
         "ts",
         "2 hours",
         "1 hour",
@@ -231,7 +205,7 @@ def s02_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     # lets availableNow terminate instead of spinning no-data batches
     # against a pending wall-clock timer.
     src = (
-        _events_stream(spark, sf)
+        stream_events(spark, sf)
         .filter(sub)
         .select(key.alias("hub_job_id"), "user_id")
     )
@@ -247,7 +221,7 @@ def s02_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     # exercise; complete mode needs no watermark under availableNow.
     # Batch session semantics are q22's 'session' part — this certifies
     # the same gap-merge through the streaming engine.
-    ssrc = _events_stream(spark, sf).filter(F.col("user_id") % 16 == 0)
+    ssrc = stream_events(spark, sf).filter(F.col("user_id") % 16 == 0)
     sagg = session_agg(
         ssrc,
         "ts",
@@ -272,49 +246,12 @@ def s02_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     ssink = f"s02_session_{next(_SINK_IDS)}"
     tsink = f"s02_topk_{next(_SINK_IDS)}"
     with stream_shuffle_partitions(spark, 8):
-        t0 = time.perf_counter()
-        starts: dict[str, float] = {}
-        starts["slide"] = time.perf_counter() - t0
-        q1 = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        starts["barrier"] = time.perf_counter() - t0
-        q2 = (
-            fired.writeStream.format("memory")
-            .queryName(bsink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        starts["session"] = time.perf_counter() - t0
-        q3 = (
-            sagg.writeStream.format("memory")
-            .queryName(ssink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # the provider class is a start-time conf captured by the
-        # query's cloned session at .start() — scoping it to this one
-        # start is safe with the three sibling queries already running
-        with state_store_provider(spark, "rocksdb"):
-            starts["topk"] = time.perf_counter() - t0
-            q4 = (
-                tk.writeStream.format("memory")
-                .queryName(tsink)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        part_wall = _await_concurrent(
-            {"slide": q1, "barrier": q2, "session": q3, "topk": q4},
-            t0,
-            starts=starts,
-        )
+        part_wall = drain({
+            "slide": lambda: StreamFlow(agg).to_memory(sink, "complete"),
+            "barrier": lambda: StreamFlow(fired).to_memory(bsink),
+            "session": lambda: StreamFlow(sagg).to_memory(ssink, "complete"),
+            "topk": lambda: StreamFlow(tk, state_store="rocksdb").to_memory(tsink),
+        })
     record_part_wall("s02_sliding_window", part_wall)
 
     ntz = spark.table(sink).schema["window_start"].dataType.simpleString()
@@ -433,8 +370,9 @@ WHERE rank <= 3
 def s03_stream_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     from stepist_spark.queries import record_part_wall
     from stepist_spark.session import load_table
+    from stepist_spark.streaming import StreamFlow
     from stepist_spark.streaming.joins import interval_join
-    from stepist_spark.streaming.runtime import stream_shuffle_partitions
+    from stepist_spark.streaming.runtime import drain, stream_shuffle_partitions
 
     ev = load_table(spark, sf, "events")
 
@@ -559,40 +497,30 @@ def s03_stream_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     # right call for LONG-RUNNING large-state deployments (s02's topk
     # documents that posture).
     sinks: dict[str, str] = {}
+    starts = {}
+    for tag, (how, _mod) in parts.items():
+        pdir, sdir = dirs[tag]
+        purchases = spark.readStream.schema(p_schema).parquet(pdir)
+        signups = spark.readStream.schema(s_schema).parquet(sdir)
+        joined = interval_join(
+            purchases,
+            signups,
+            on="user_id",
+            left_ts="p_ts",
+            right_ts="s_ts",
+            lower="6 hours",
+            upper="0 seconds",
+            watermark="6 hours",
+            how=how,
+        )
+        out = joined.select(
+            "event_id", "user_id", "p_ts", "s_ts",
+            F.round("value", 2).alias("value"),
+        )
+        sinks[tag] = f"s03_{tag}_{next(_SINK_IDS)}"
+        starts[tag] = functools.partial(StreamFlow(out).to_memory, sinks[tag])
     with stream_shuffle_partitions(spark, 8):
-        t0 = time.perf_counter()
-        queries = {}
-        starts: dict[str, float] = {}
-        for tag, (how, _mod) in parts.items():
-            pdir, sdir = dirs[tag]
-            purchases = spark.readStream.schema(p_schema).parquet(pdir)
-            signups = spark.readStream.schema(s_schema).parquet(sdir)
-            joined = interval_join(
-                purchases,
-                signups,
-                on="user_id",
-                left_ts="p_ts",
-                right_ts="s_ts",
-                lower="6 hours",
-                upper="0 seconds",
-                watermark="6 hours",
-                how=how,
-            )
-            out = joined.select(
-                "event_id", "user_id", "p_ts", "s_ts",
-                F.round("value", 2).alias("value"),
-            )
-            sink = f"s03_{tag}_{next(_SINK_IDS)}"
-            sinks[tag] = sink
-            starts[tag] = time.perf_counter() - t0
-            queries[tag] = (
-                out.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        part_wall = _await_concurrent(queries, t0, starts=starts)
+        part_wall = drain(starts)
     record_part_wall("s03_stream_interval_join", part_wall)
     # sentinel filter AFTER the sink: in-query it would push below the
     # watermark operator and delete the sentinels at the scan
@@ -642,7 +570,7 @@ def s04_rate_windows(spark: SparkSession, sf: str) -> DataFrame:
     from stepist_spark.session import load_table, stream_events
     from stepist_spark.sources.envelope import from_envelope, to_envelope
     from stepist_spark.streaming import StreamFlow
-    from stepist_spark.streaming.runtime import await_drained, stream_shuffle_partitions
+    from stepist_spark.streaming.runtime import drain, stop_when, stream_shuffle_partitions
     from stepist_spark.streaming.windows import tumbling_agg
 
     # Round-11 optimization (guide §2.6 overlap-independent-jobs): the
@@ -704,29 +632,16 @@ def s04_rate_windows(spark: SparkSession, sf: str) -> DataFrame:
         exp_rows = (
             load_table(spark, sf, "events").filter(F.col("event_id") % 37 == 0).count()
         )
-        # Drain detection off the query's OWN progress counters (driver-
-        # side dict reads — round 11, guide §1.5/§2.6): the file sink
-        # reports numOutputRows=-1, but rate-micro-batch emits values
-        # sequentially at 200 input rows per batch, so total input ≥ 600
-        # is exactly "batch 2 (values 400-599) committed" — every
-        # value<600 row is in the sink. The former loop launched a full
-        # read.parquet().count() JOB every 0.1s against the live sink,
-        # contending with the very trigger loop it was watching. The
-        # authoritative file count below still gates the commit by value.
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            # _progress_dict: PySpark's progress type is a plain class
-            # (not a dict subclass) on 3.4/3.5 — normalize before .get
-            # (round-11 ADVICE)
-            fed = sum(
-                int(_progress_dict(p).get("numInputRows") or 0)
-                for p in (q1.recentProgress or [])
-            )
-            if fed >= 600:
-                break
-            time.sleep(0.05)
-        hop1.stop()
-        await_drained(qa)
+        # Drain detection off the query's OWN progress counters: the
+        # file sink reports numOutputRows=-1, but rate-micro-batch emits
+        # values sequentially at 200 input rows per batch, so total
+        # input ≥ 600 is exactly "batch 2 (values 400-599) committed" —
+        # every value<600 row is in the sink. (A read.parquet().count()
+        # job per poll against the live sink contended with the very
+        # trigger loop it watched.) The file counts below gate the
+        # commit by value.
+        stop_when(q1, lambda ps: sum(p["numInputRows"] for p in ps) >= 600)
+        drain({"env": lambda: qa})
     written = spark.read.parquet(hop_dir).count()
     if written != 600:
         raise TimeoutError(f"s04 hop-1 committed {written}/600 rows before timeout")
@@ -777,18 +692,10 @@ def s04_rate_windows(spark: SparkSession, sf: str) -> DataFrame:
     sink = f"s04_sink_{next(_SINK_IDS)}"
     env_sink = f"s04_env_{next(_SINK_IDS)}"
     with stream_shuffle_partitions(spark, 4):
-        t0 = time.perf_counter()
-        starts = {"win": 0.0}
-        q_win = flow2.to_memory(
-            sink, output_mode="complete", trigger={"availableNow": True}
-        )
-        starts["env"] = time.perf_counter() - t0
-        q_env = hop_b.to_memory(
-            env_sink, output_mode="complete", trigger={"availableNow": True}
-        )
-        part_wall = _await_concurrent(
-            {"win": q_win, "env": q_env}, t0, starts=starts
-        )
+        part_wall = drain({
+            "win": lambda: flow2.to_memory(sink, "complete"),
+            "env": lambda: hop_b.to_memory(env_sink, "complete"),
+        })
     record_part_wall("s04_rate_windows", part_wall)
     # introspection (reference `jobs_count`/`monitor_steps`,
     # `stepist/flow/steps/step.py:154-164`): after the drain the flow
@@ -878,87 +785,14 @@ GROUP BY 2
 #   micro-batch 2 replays batch 1's documents under shifted ids plus
 #   novel ones; only first-seen content may reach the output table —
 #   without the history anti-join the shifted copies land too.
-def _await_concurrent(
-    queries, t0: float, timeout: float = 300.0, starts: dict[str, float] | None = None
-) -> dict[str, dict[str, float]]:
-    """Poll a set of CONCURRENT streaming queries to completion and
-    return ``{name: {"start": start_offset_s, "done": completion_offset_s}}``
-    (both seconds from ``t0``).
-
-    ``awaitTermination`` would serialize attribution — a query that
-    finished while an earlier one was being awaited records the
-    awaiter's timestamp, not its own. Polling ``isActive`` keeps the
-    per-part numbers honest; the post-inactive ``awaitTermination(5)``
-    surfaces any query exception instead of letting the caller read a
-    partially-filled sink.
-
-    Both offsets are reported because for concurrently draining
-    queries a completion offset alone over-attributes: a cheap part
-    that happens to finish last would absorb the whole group's wall
-    clock. ``starts`` is the per-query start offset recorded by the
-    caller at ``.start()`` time (0.0 when omitted — started at t0).
-
-    As each query finishes, a per-micro-batch summary (batchId, input
-    rows, trigger/addBatch durations, state rows/memory) is captured
-    into the module-level ``LAST_PROGRESS`` — the raw material any
-    future drain-wall regression probe needs (the round-10 s03 lesson:
-    the micro-batch SHAPE, not the wall number, is what distinguishes
-    a plan regression from host stretch)."""
-    starts = starts or {}
-    pending = dict(queries)
-    done: dict[str, dict[str, float]] = {}
-    deadline = time.time() + timeout
-    while pending:
-        for name, q in list(pending.items()):
-            if not q.isActive:
-                try:
-                    q.awaitTermination(5)  # surfaces the query's exception
-                except Exception:
-                    for other in pending.values():  # don't leak the rest
-                        if other is not q:
-                            other.stop()
-                    raise
-                done[name] = {
-                    "start": starts.get(name, 0.0),
-                    "done": time.perf_counter() - t0,
-                }
-                LAST_PROGRESS[name] = [
-                    {
-                        "batchId": p.get("batchId"),
-                        "numInputRows": p.get("numInputRows"),
-                        "triggerMs": (p.get("durationMs") or {}).get(
-                            "triggerExecution"
-                        ),
-                        "addBatchMs": (p.get("durationMs") or {}).get("addBatch"),
-                        "stateRows": sum(
-                            so.get("numRowsTotal", 0)
-                            for so in (p.get("stateOperators") or [])
-                        ),
-                        "stateMemory": sum(
-                            so.get("memoryUsedBytes", 0)
-                            for so in (p.get("stateOperators") or [])
-                        ),
-                    }
-                    for p in (_progress_dict(rp) for rp in q.recentProgress)
-                ]
-                del pending[name]
-        if pending:
-            if time.time() > deadline:
-                for q in pending.values():
-                    q.stop()
-                raise TimeoutError(
-                    f"streaming queries still running at +{timeout}s: {sorted(pending)}"
-                )
-            time.sleep(0.05)
-    return done
-
-
 def s05_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     from stepist_spark.queries import record_part_wall
-    from stepist_spark.session import build_concurrently, load_table
+    from stepist_spark.session import build_concurrently, load_table, stream_events
+    from stepist_spark.sources.writers import write_stream
+    from stepist_spark.streaming import StreamFlow
     from stepist_spark.streaming.dedup import stream_dedup
     from stepist_spark.streaming.incremental import dedup_against_history
-    from stepist_spark.streaming.runtime import stream_shuffle_partitions
+    from stepist_spark.streaming.runtime import drain, stop_when, stream_shuffle_partitions
 
     # The four certifications are INDEPENDENT pipelines (separate
     # inputs, sinks, checkpoints), so after the batch staging writes
@@ -1030,19 +864,23 @@ def s05_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     build_concurrently(spark, [_stage_restart, _stage_incr, _stage_upsert])
 
     # ---- start all four pipelines, drain concurrently ----------------------
+    now = {"availableNow": True}
+
     def start_run():
         rsrc = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(in_dir)
         )
-        return (
-            rsrc.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return StreamFlow(rsrc).to_files(out_dir, checkpoint=ckpt, trigger=now)
+
+    def restart():
+        # kill the first run MID-INPUT (after ≥2 of the 4 one-file
+        # batches committed) while the other three drain, then resume
+        # from the same checkpoint; the part's start offset stays the
+        # killed run's, where the certification begins
+        stop_when(start_run(), lambda ps: any(p["batchId"] >= 1 for p in ps))
+        return start_run()
 
     from stepist_spark.operators import cdc as _cdc
 
@@ -1069,82 +907,55 @@ def s05_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     dd = fresh_scratch(spark, "s05_dedup")
     ddir, dckpt = os.path.join(dd, "out"), os.path.join(dd, "ckpt")
+    # 'dedup': the events stream unioned with ITSELF (every row arrives
+    # exactly twice) through dropDuplicates state. File sink, not
+    # memory: the memory sink collects every deduped row onto the
+    # driver (1.28M rows at sf1 — Spark warns on the oversized
+    # local-scan tasks), which is exactly the driver bottleneck this
+    # engine avoids elsewhere.
+    src = stream_events(spark, sf)
+    deduped = stream_dedup(src.unionByName(src), ["event_id"]).select(
+        "event_id", "ts", "event_type", F.round("value", 2).alias("value")
+    )
+    # 'incr': incremental HISTORY dedup (streaming/incremental.py)
+    isrc = (
+        spark.readStream.schema(d1.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(sdir)
+    )
+    # 'upsert': update-mode aggregate -> foreachBatch MERGE
+    uagg = (
+        spark.readStream.schema(e3.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(udir)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("cents"))
+    )
+    # 'restart': wherever the kill lands, the checkpointed file sink
+    # must make the resumed run land every row EXACTLY ONCE — reference
+    # operator #10's at-least-once upgraded to exactly-once
+    # (`stepist/flow/libs/simple_queue.py:42-47`)
     with stream_shuffle_partitions(spark, 8):
-        t0 = time.perf_counter()
-        # 'dedup': the events stream unioned with ITSELF (every row
-        # arrives exactly twice) through dropDuplicates state. File
-        # sink, not memory: the memory sink collects every deduped row
-        # onto the driver (1.28M rows at sf1 — Spark warns on the
-        # oversized local-scan tasks), which is exactly the driver
-        # bottleneck this engine avoids elsewhere.
-        starts: dict[str, float] = {}
-        src = _events_stream(spark, sf)
-        deduped = stream_dedup(src.unionByName(src), ["event_id"]).select(
-            "event_id", "ts", "event_type", F.round("value", 2).alias("value")
-        )
-        starts["dedup"] = time.perf_counter() - t0
-        q_dedup = (
-            deduped.writeStream.format("parquet")
-            .option("path", ddir)
-            .option("checkpointLocation", dckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # 'incr': incremental HISTORY dedup (streaming/incremental.py)
-        isrc = (
-            spark.readStream.schema(d1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(sdir)
-        )
-        starts["incr"] = time.perf_counter() - t0
-        q_incr = dedup_against_history(
-            isrc,
-            out_dir=os.path.join(di, "out"),
-            history_dir=os.path.join(di, "hist"),
-            checkpoint=os.path.join(di, "ckpt"),
-            trigger={"availableNow": True},
-        )
-        # 'upsert': update-mode aggregate -> foreachBatch MERGE
-        usrc = (
-            spark.readStream.schema(e3.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(udir)
-        )
-        starts["upsert"] = time.perf_counter() - t0
-        q_upsert = (
-            usrc.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("cents"))
-            .writeStream.outputMode("update")
-            .foreachBatch(_merge_batch)
-            .option("checkpointLocation", os.path.join(du, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        # 'restart': kill the query MID-INPUT (after ≥2 of the 4
-        # one-file batches committed) while the other three drain;
-        # wherever the stop lands, the checkpointed file sink must make
-        # the restart land every row EXACTLY ONCE — reference operator
-        # #10's at-least-once upgraded to exactly-once
-        # (`stepist/flow/libs/simple_queue.py:42-47`)
-        starts["restart"] = time.perf_counter() - t0  # the certification
-        # begins at the first (killed) run, not at the resumed q2
-        q1 = start_run()
-        deadline = time.time() + 120
-        while q1.isActive and time.time() < deadline:
-            lp = q1.lastProgress
-            if lp is not None and lp["batchId"] >= 1:
-                break
-            time.sleep(0.02)
-        q1.stop()
-        if not q1.awaitTermination(60):
-            raise TimeoutError("s05 restart: stopped query did not terminate in 60s")
-        q2 = start_run()
-        part_wall = _await_concurrent(
-            {"dedup": q_dedup, "incr": q_incr, "upsert": q_upsert, "restart": q2},
-            t0,
-            starts=starts,
-        )
+        part_wall = drain({
+            "dedup": lambda: StreamFlow(deduped).to_files(
+                ddir, checkpoint=dckpt, trigger=now
+            ),
+            "incr": lambda: dedup_against_history(
+                isrc,
+                out_dir=os.path.join(di, "out"),
+                history_dir=os.path.join(di, "hist"),
+                checkpoint=os.path.join(di, "ckpt"),
+                trigger=now,
+            ),
+            "upsert": lambda: write_stream(
+                uagg,
+                os.path.join(du, "ckpt"),
+                output_mode="update",
+                trigger=now,
+                foreach_batch=_merge_batch,
+            ),
+            "restart": restart,
+        })
     record_part_wall("s05_stream_dedup", part_wall)
 
     # ---- assemble the tag union off the materialized sinks -----------------

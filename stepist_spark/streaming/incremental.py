@@ -17,12 +17,12 @@ the hash for a shuffle-free anti-join.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from stepist_spark.sources.writers import write_stream
 
 # error conditions of a history read that mean "nothing ingested yet"
 _NO_HISTORY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
@@ -83,7 +83,4 @@ def dedup_against_history(
         finally:
             fresh.unpersist()
 
-    writer = src.writeStream.foreachBatch(ingest).option("checkpointLocation", checkpoint)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return write_stream(src, checkpoint, trigger=trigger, foreach_batch=ingest)

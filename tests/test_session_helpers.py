@@ -155,3 +155,38 @@ class TestMaterializeAtTheSource:
         for name, run in runs.items():
             run().collect()
             assert cache.isEmpty(), name
+
+
+class TestDrainInOnePlace:
+    @staticmethod
+    def _attribute_sites(*attrs: str) -> dict[str, set[str]]:
+        pkg = pathlib.Path(stepist_spark.__file__).parent
+        sites: dict[str, set[str]] = {}
+        for path in sorted(pkg.rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if isinstance(node, ast.Attribute):
+                    name = node.attr
+                    if name == "sleep" and not (
+                        isinstance(node.value, ast.Name) and node.value.id == "time"
+                    ):
+                        continue
+                elif isinstance(node, ast.alias) and node.name == "sleep":
+                    name = "sleep"  # from time import sleep
+                else:
+                    continue
+                if name in attrs:
+                    sites.setdefault(name, set()).add(str(path.relative_to(pkg)))
+        return sites
+
+    def test_streams_are_waited_on_only_in_runtime(self):
+        # runtime.drain / stop_when are the one wait loop: a hand-rolled
+        # poll elsewhere loses the loud timeout and the stop-the-rest
+        sites = self._attribute_sites(
+            "awaitTermination", "isActive", "recentProgress", "lastProgress", "sleep"
+        )
+        offenders = {f for files in sites.values() for f in files}
+        assert offenders == {"streaming/runtime.py"}, sites
+
+    def test_sinks_start_only_in_writers_and_runtime(self):
+        sites = self._attribute_sites("writeStream")
+        assert sites["writeStream"] == {"sources/writers.py", "streaming/runtime.py"}

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from stepist_spark.pipeline import Pipeline
 from stepist_spark.sources import read_stream
 from stepist_spark.streaming import StreamFlow, barrier_reduce, session_agg, sliding_agg, tumbling_agg
+from stepist_spark.streaming.runtime import drain, stop_when
 
 
 @pytest.fixture
@@ -98,6 +99,77 @@ class TestStreamFlow:
         q = flow.to_memory("t_status")
         _drain(q)
         assert flow.status()["active"] is False
+
+
+def _endless(spark, name):
+    """A query that never ends on its own (rate source, continuous trigger)."""
+    src = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 10)
+        .option("startTimestamp", 0)
+        .load()
+    )
+    return StreamFlow(src).to_memory(name, trigger={"processingTime": "0 seconds"})
+
+
+class TestDrainSeam:
+    """runtime.drain / runtime.stop_when: the one place streams are
+    waited on, failing loudly and leaving no query running."""
+
+    def test_stop_when_times_out_and_stops(self, spark):
+        q = _endless(spark, "t_stop_when_never")
+        with pytest.raises(TimeoutError, match="stop condition"):
+            stop_when(q, lambda ps: False, timeout=2)
+        assert not q.isActive
+
+    def test_stop_when_stops_once_ready(self, spark):
+        q = _endless(spark, "t_stop_when_rows")
+        stop_when(q, lambda ps: sum(p["numInputRows"] for p in ps) >= 30)
+        assert not q.isActive
+        assert spark.table("t_stop_when_rows").count() >= 30
+
+    def test_failing_thunk_stops_started_queries(self, spark):
+        before = {q.id for q in spark.streams.active}
+
+        def broken():
+            raise RuntimeError("start failed")
+
+        with pytest.raises(RuntimeError, match="start failed"):
+            drain({"first": lambda: _endless(spark, "t_drain_first"), "second": broken})
+        assert {q.id for q in spark.streams.active} - before == set()
+
+    def test_failing_query_surfaces_and_stops_sibling(self, spark, jobs_dir, tmp_path):
+        def boom(df, epoch_id):
+            raise ValueError("boom in foreachBatch")
+
+        src = read_stream(spark, "json", jobs_dir, schema=JOBS_SCHEMA)
+        started = {}
+
+        def sibling():
+            started["q"] = _endless(spark, "t_drain_sibling")
+            return started["q"]
+
+        with pytest.raises(StreamingQueryException, match="boom in foreachBatch"):
+            drain({
+                "sibling": sibling,
+                "failing": lambda: StreamFlow(src).to_foreach_batch(
+                    boom, checkpoint=str(tmp_path / "ckpt"), trigger={"availableNow": True}
+                ),
+            })
+        assert not started["q"].isActive
+
+    def test_offsets_in_thunk_order(self, spark, jobs_dir):
+        starts = {
+            name: (lambda n=name: StreamFlow(
+                read_stream(spark, "json", jobs_dir, schema=JOBS_SCHEMA)
+            ).to_memory(n))
+            for name in ("t_drain_b", "t_drain_a", "t_drain_c")
+        }
+        wall = drain(starts)
+        assert list(wall) == ["t_drain_b", "t_drain_a", "t_drain_c"]
+        for offsets in wall.values():
+            assert 0 <= offsets["start"] <= offsets["done"]
+        assert spark.table("t_drain_a").count() == 4
 
 
 class TestBarrierReduce:
