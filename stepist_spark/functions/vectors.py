@@ -17,38 +17,22 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Fixed random-hyperplane constants for sign-LSH (8 planes × 64 dims),
+# Fixed random-hyperplane constants for sign-LSH (64 planes × 64 dims),
 # generated once from a linear congruential generator so they are plain
-# literals shared with the oracle SQL. Values in [-1, 1).
+# literals shared with the oracle SQL.
 _LCG_M = 2_147_483_647
 _LCG_A = 48_271
 
-
-def _lcg_stream(seed: int, n: int) -> list[float]:
-    out = []
-    x = seed
-    for _ in range(n):
-        x = (_LCG_A * x) % _LCG_M
-        out.append(2.0 * x / _LCG_M - 1.0)
-    return out
-
-
-N_PLANES = 8
 DIM = 64
-# 64 planes total: the first 8 serve the legacy single-table bucket
-# (c01's partition key); banded LSH draws bands of 8 or 16 consecutive
-# planes via the `offset` parameter below (4 bands × 16 planes needs
-# all 64).
+# 64 planes total: banded LSH draws bands of 8 or 16 consecutive planes
+# (4 bands × 16 planes needs all 64).
 MAX_PLANES = 64
-HYPERPLANES: list[list[float]] = [
-    _lcg_stream(seed=1234 + 7 * p, n=DIM) for p in range(MAX_PLANES)
-]
 
 
 def _lcg_int_stream(seed: int, n: int) -> list[int]:
-    """The same LCG draw as :func:`_lcg_stream` kept in exact integer
-    form: ``2*x - M`` (so int_plane / M == the float plane in real
-    arithmetic, before any double rounding)."""
+    """A Park–Miller LCG draw in exact integer form: ``2*x - M``, a
+    plane component scaled by ``M`` (``(2*x - M) / M`` lies in
+    [-1, 1))."""
     out = []
     x = seed
     for _ in range(n):
@@ -128,61 +112,6 @@ def cosine_sql(a: str, b: str) -> str:
         f"CASE WHEN {norm_sql(a)} > 0 AND {norm_sql(b)} > 0 "
         f"THEN {dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}) ELSE 0.0 END"
     )
-
-
-def hyperplane_literal(p: int) -> Column:
-    return F.array(*[F.lit(v) for v in HYPERPLANES[p]])
-
-
-def lsh_bucket(vec: Column, n_planes: int = N_PLANES, offset: int = 0) -> Column:
-    """Sign-LSH bucket id: bit p is 1 iff dot(vec, plane_{offset+p}) >= 0.
-
-    Vectors with high cosine similarity land in the same bucket with
-    high probability, turning ANN search into an equi-join on this
-    bigint — the 100 TB-scale path for similarity search. ``offset``
-    selects a disjoint plane slice, so banded LSH (OR-of-ANDs across
-    bands of AND-ed planes) reuses this as its per-band signature.
-    """
-    if offset + n_planes > MAX_PLANES:
-        raise ValueError(f"plane slice [{offset}, {offset + n_planes}) exceeds {MAX_PLANES}")
-    bucket = F.lit(0).cast("bigint")
-    for p in range(n_planes):
-        bit = F.when(
-            dot(vec, hyperplane_literal(offset + p)) >= 0, F.lit(1).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-        bucket = bucket + F.shiftleft(bit, p)
-    return bucket
-
-
-def lsh_bucket_fast(vec: Column, n_planes: int = N_PLANES) -> Column:
-    """Vectorized sign-LSH bucket: one Arrow-batched numpy matmul per
-    batch instead of ``n_planes`` interpreted fold-dots per row.
-
-    Measured comparable to :func:`lsh_bucket` at 64 dims × 8 planes on
-    local mode (~12 µs/row both ways at 200k rows; Arrow transfer eats
-    the matmul win); its advantage grows with dims × planes, where the
-    interpreted path scales linearly in plane count and this stays one
-    BLAS call. Same planes, same bit layout. NOT used in oracle
-    queries: numpy sums pairwise, so a dot landing EXACTLY on 0.0
-    could sign differently than the sequential fold — no occurrences
-    on the test corpus (asserted in tests), but not certifiable
-    bit-for-bit.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.array(HYPERPLANES[:n_planes])  # (p, d)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    def _bucket(s):
-        m = np.stack(s.to_numpy()).astype(np.float64)  # (n, d)
-        bits = (m @ planes.T) >= 0.0  # (n, p)
-        return pd.Series(bits @ weights)
-
-    # explicit scalar eval type: module-level `from __future__ import
-    # annotations` stringifies hints, which the hint-based API rejects
-    return pandas_udf(_bucket, "bigint")(vec)
 
 
 def band_signatures(vec: Column, n_bands: int, planes_per_band: int) -> Column:

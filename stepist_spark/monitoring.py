@@ -26,7 +26,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from stepist_spark.pipeline import Pipeline, Step
+from stepist_spark.pipeline import Pipeline
 
 _MON_IDS = itertools.count()
 
@@ -63,8 +63,7 @@ class StepMonitor:
 
     def _wrap(self, name: str, fn):
         def stage(df: DataFrame) -> DataFrame:
-            res = fn.transform(df) if isinstance(fn, Step) else fn(df)
-            return self._tap(res, name)
+            return self._tap(fn(df), name)
 
         stage.__name__ = name
         return stage

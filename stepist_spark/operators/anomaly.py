@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from stepist_spark.operators.cumulative import grouped_frame
 from stepist_spark.operators.cumulative import require_groups as _require_groups
+from stepist_spark.operators.topk import grouped_topk
 
 
 def _join_on_groups(left: DataFrame, right: DataFrame, group_cols) -> DataFrame:
@@ -597,12 +598,14 @@ def cusum_changepoint(
         *group_cols, "_ts", "_id", "_t", "_n",
         F.abs(d).cast("decimal(38,0)").alias("_dabs"),
     )
-    w_pick = Window.partitionBy(*group_cols).orderBy(
-        F.col("_dabs").desc(), F.col("_ts").asc(), F.col("_id").asc()
-    )
     return (
-        with_d.withColumn("_rn", F.row_number().over(w_pick))
-        .filter(F.col("_rn") == 1)
+        grouped_topk(
+            with_d,
+            group_cols,
+            [F.col("_dabs").desc(), F.col("_ts").asc(), F.col("_id").asc()],
+            1,
+            rank_col="_rn",
+        )
         .select(
             *group_cols,
             F.col("_n").cast("bigint").alias("n"),

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stepist_spark.operators.topk import grouped_topk
+
 
 def basket_pairs(
     df: DataFrame, basket_col: str, item_col: str
@@ -209,8 +211,6 @@ def item_similarity(
     by neighbor id. Output: ``item, neighbor, rank, pair_n, item_n,
     neighbor_n, cosine`` (6-dp).
     """
-    from pyspark.sql import Window
-
     pc = (
         pair_counts(df, basket_col, item_col)
         if pair_counts_df is None
@@ -239,12 +239,10 @@ def item_similarity(
     cos = F.col("pair_n").cast("double") / F.sqrt(
         (F.col("item_n") * F.col("neighbor_n")).cast("double")
     )
-    w = Window.partitionBy("item").orderBy(
-        cos.desc(), F.col("neighbor").asc()
-    )
     return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
+        grouped_topk(
+            joined, ["item"], [cos.desc(), F.col("neighbor").asc()], top_n, rank_col="rank"
+        )
         .select(
             "item",
             "neighbor",

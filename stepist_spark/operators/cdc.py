@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from stepist_spark.operators.cumulative import require_groups
+from stepist_spark.operators.topk import grouped_topk
 
 #: operation codes in the change stream
 OP_INSERT = "I"
@@ -69,16 +70,8 @@ def latest_changes(
     key_cols = require_groups(
         key_cols, "latest_changes", "CDC collapse is keyed by definition"
     )
-    w = Window.partitionBy(*[F.col(k) for k in key_cols]).orderBy(
-        F.col(seq_col).desc(),
-        prec.desc(),
-        *[F.col(c).asc() for c in tie_cols],
-    )
-    return (
-        changes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    order = [F.col(seq_col).desc(), prec.desc(), *[F.col(c).asc() for c in tie_cols]]
+    return grouped_topk(changes, key_cols, order, 1, rank_col="_rn").drop("_rn")
 
 
 def apply_changes(
@@ -259,14 +252,13 @@ def scd2_history(
     key_cols = require_groups(
         key_cols, "scd2_history", "SCD2 history is keyed by definition"
     )
-    w_tie = Window.partitionBy(
-        *[F.col(k) for k in key_cols], F.col(seq_col)
-    ).orderBy(prec.desc(), *[F.col(c).asc() for c in tie_cols])
-    collapsed = (
-        changes.withColumn("_rn", F.row_number().over(w_tie))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    collapsed = grouped_topk(
+        changes,
+        [*key_cols, seq_col],
+        [prec.desc(), *[F.col(c).asc() for c in tie_cols]],
+        1,
+        rank_col="_rn",
+    ).drop("_rn")
     w_seq = Window.partitionBy(*[F.col(k) for k in key_cols]).orderBy(
         F.col(seq_col).asc()
     )

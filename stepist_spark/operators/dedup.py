@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from stepist_spark.functions import hashing
 from stepist_spark.functions.text import tokens
+from stepist_spark.operators.topk import grouped_topk
 
 
 
@@ -107,12 +108,9 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Keep one row (min id) per distinct text. Single shuffle: window
     row_number over the content hash, keep rn=1."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
+    return grouped_topk(
+        df, [F.md5(F.col(text_col))], [F.col(id_col)], 1, rank_col="_rn"
+    ).drop("_rn")
 
 
 def banded_signatures(
@@ -429,7 +427,7 @@ def set_similarity_join(
     t_num: int = 1,
     t_den: int = 2,
     shingle_k: int | None = None,
-    elems: DataFrame | None = None,
+    sets: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT Jaccard-threshold self-join via prefix filtering — the
     AllPairs/PPJoin family (Bayardo et al. WWW'07; Xiao et al. WWW'08,
@@ -454,49 +452,53 @@ def set_similarity_join(
 
     Output: ``id_a, id_b, jaccard`` with id_a < id_b.
 
-    ``elems``: optional pre-built flat ``(_sid, _h)`` element table of
-    xxhash64-hashed set elements per doc — e.g. an explode of a caller's
+    ``sets``: optional pre-built ``(_sid, _set array<bigint>)`` frame of
+    xxhash64-hashed set elements, ONE ROW PER DOC (two rows with one
+    ``_sid`` are two different sets under one id) — e.g. a caller's
     already-hashed set arrays. Skips this operator's own tokenize→hash
-    pass. The operator dedups the element table on both paths, so a
-    repeated caller element cannot inflate a set's length.
+    pass. Each array is normalized per row with
+    ``sort_array(array_distinct(_set))`` — a narrow map, no shuffle — so
+    a repeated caller element cannot inflate a set's length.
     """
     if not (0 < t_num <= t_den):
         raise ValueError("threshold must satisfy 0 < t_num/t_den <= 1")
-    if elems is None:
+    if sets is None:
         toked = df.select(F.col(id_col).alias("_sid"), tokens(F.col(text_col)).alias("_tk"))
         unit = (
             hashing.shingles(F.col("_tk"), shingle_k) if shingle_k else F.col("_tk")
         )
         # EVERYTHING downstream runs on 64-bit hashes of the set elements,
-        # never the strings: one flat (doc, hash) ELEMENT TABLE is the only
-        # materialization (8 bytes/element), and the set arrays, lengths,
-        # frequencies, and prefixes all derive from it — the text is
-        # tokenized exactly once. A cross-doc hash collision could in
+        # never the strings: one (doc, hash array) frame is the only
+        # materialization (8 bytes/element), and the lengths, frequencies,
+        # prefixes and verification arrays all derive from it — the text
+        # is tokenized exactly once. A cross-doc hash collision could in
         # principle perturb a pair's intersection count — probability
         # ~|set|²/2^64 ≈ 1e-13 per pair, negligible even across 100 TB of
         # candidate pairs.
-        elems = toked.select("_sid", F.explode(unit).alias("_t")).select(
-            "_sid", F.xxhash64("_t").alias("_h")
-        )
-    elems = elems.distinct().localCheckpoint(eager=False)
-    lens = elems.groupBy("_sid").agg(F.count(F.lit(1)).alias("_len"))
-    dfreq = elems.groupBy("_h").agg(F.count(F.lit(1)).alias("_df"))
-    from pyspark.sql import Window
-
-    # canonical global order for prefix filtering just has to be
-    # consistent across sets — rarest-first by (hash-df, hash) is.
-    w = Window.partitionBy("_sid").orderBy(F.col("_df").asc(), F.col("_h").asc())
+        sets = toked.select("_sid", F.transform(unit, lambda t: F.xxhash64(t)).alias("_set"))
+    sets = (
+        sets.select("_sid", F.sort_array(F.array_distinct("_set")).alias("_set"))
+        .withColumn("_len", F.size("_set"))
+        .localCheckpoint(eager=False)
+    )
+    flat = sets.select("_sid", "_len", F.explode("_set").alias("_h"))
+    dfreq = flat.groupBy("_h").agg(F.count(F.lit(1)).alias("_df"))
     prefix_len = (
         F.col("_len")
         - F.expr(f"({t_num} * _len + {t_den} - 1) DIV {t_den}")
         + F.lit(1)
     )
-    # materialize: both sides of the candidate self-join read this
+    # canonical global order for prefix filtering just has to be
+    # consistent across sets — rarest-first by (hash-df, hash) is.
+    # Materialize: both sides of the candidate self-join read this
     prefix = (
-        elems.join(dfreq, "_h")
-        .join(lens, "_sid")
-        .withColumn("_idx", F.row_number().over(w))
-        .filter(F.col("_idx") <= prefix_len)
+        grouped_topk(
+            flat.join(dfreq, "_h"),
+            ["_sid"],
+            [F.col("_df").asc(), F.col("_h").asc()],
+            prefix_len,
+            rank_col="_idx",
+        )
         .select("_sid", "_len", "_h")
         .localCheckpoint(eager=False)
     )
@@ -514,11 +516,6 @@ def set_similarity_join(
         )
         .select(F.col("a._sid").alias("id_a"), F.col("b._sid").alias("id_b"))
         .distinct()
-    )
-    # verification arrays (sorted for determinism) rebuilt from the
-    # element table — its checkpoint makes this a single cheap shuffle
-    sets = elems.groupBy("_sid").agg(
-        F.sort_array(F.collect_list("_h")).alias("_set")
     )
     # the candidate table is BYTES-small but COMPUTE-heavy (one
     # array-intersect per row): AQE coalesces it to a couple of

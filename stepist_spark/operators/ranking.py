@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from stepist_spark.functions.text import tokens, tokens_sql
+from stepist_spark.operators.topk import grouped_topk
 
 SCALE = 1_000_000  # fixed-point scale for portable partial scores
 
@@ -151,15 +152,13 @@ def bm25_topk(
         F.sum(part_scaled).alias("score_scaled"),
         F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_scaled").desc(), F.col("doc_id").asc()
-    )
-    return (
-        agg.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "rank", "score_scaled", "n_terms_hit")
+    order = [F.col("score_scaled").desc(), F.col("doc_id").asc()]
+    return grouped_topk(agg, ["query_id"], order, k, rank_col="rank").select(
+        "query_id",
+        "doc_id",
+        F.col("rank").cast("bigint").alias("rank"),
+        "score_scaled",
+        "n_terms_hit",
     )
 
 
@@ -364,15 +363,13 @@ def rrf_fuse(
         F.sum(contrib).cast("bigint").alias("rrf_scaled"),
         F.count(F.lit(1)).cast("bigint").alias("n_systems"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_scaled").desc(), F.col("doc_id").asc()
-    )
-    return (
-        agg.withColumn("fused_rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("fused_rank") <= k)
-        .select("query_id", "doc_id", "fused_rank", "rrf_scaled", "n_systems")
+    order = [F.col("rrf_scaled").desc(), F.col("doc_id").asc()]
+    return grouped_topk(agg, ["query_id"], order, k, rank_col="fused_rank").select(
+        "query_id",
+        "doc_id",
+        F.col("fused_rank").cast("bigint").alias("fused_rank"),
+        "rrf_scaled",
+        "n_systems",
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stepist_spark.functions import hashing
+from stepist_spark.operators.topk import grouped_topk
 
 DEFAULT_SPLITS: tuple[tuple[str, int], ...] = (("train", 80), ("val", 10), ("test", 10))
 
@@ -95,15 +96,10 @@ def stratified_sample(
     a fraction-based sample at scale, filter on ``hash % K < fK``
     instead (no shuffle at all).
     """
-    from pyspark.sql import Window
-
     h = hashing.word_hash32(F.col(id_col).cast("string"))
-    w = Window.partitionBy(strata_col).orderBy(h.asc(), F.col(id_col).asc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n_per_stratum)
-        .drop("_rn")
-    )
+    return grouped_topk(
+        df, [strata_col], [h.asc(), F.col(id_col).asc()], n_per_stratum, rank_col="_rn"
+    ).drop("_rn")
 
 
 def stratified_sample_sql(
@@ -358,8 +354,6 @@ def weighted_priority_sample(
 
     One window sort per group over the input — same shape as top-k.
     """
-    from pyspark.sql import Window
-
     gcols = list(group_cols or [])
     u1 = hashing.word_hash32(
         F.concat(F.col(id_col).cast("string"), F.lit(":wps"))
@@ -377,14 +371,9 @@ def weighted_priority_sample(
         .drop("_wnum")
     )
     if gcols:
-        w = Window.partitionBy(*gcols).orderBy(
-            F.col("_wkey").asc(), F.col(id_col).asc()
-        )
-        return (
-            keyed.withColumn("_wrn", F.row_number().over(w))
-            .filter(F.col("_wrn") <= k)
-            .drop("_wkey", "_wrn")
-        )
+        return grouped_topk(
+            keyed, gcols, [F.col("_wkey").asc(), F.col(id_col).asc()], k, rank_col="_wrn"
+        ).drop("_wkey", "_wrn")
     # ungrouped global top-k: sort().limit() plans as
     # TakeOrderedAndProject — every task keeps ≤ k rows, no
     # single-task window over the full keyed corpus

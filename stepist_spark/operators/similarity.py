@@ -9,10 +9,12 @@ the standard sub-linear ANN shape for 100 TB corpora.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stepist_spark.functions import vectors as V
+from stepist_spark.operators.dedup import candidates_from_banded
+from stepist_spark.operators.topk import grouped_topk
 
 
 
@@ -53,6 +55,20 @@ def lsh_band_signatures(
     return c.select(out_id, F.posexplode("_sigs").alias("band", "sig"))
 
 
+def _per_query_topk(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """The ``k`` best-scoring neighbors per query (score desc,
+    neighbor id tiebreak) — every search's final cut."""
+    order = [F.col(score_col).desc(), F.col("neighbor_id").asc()]
+    return grouped_topk(scored, ["query_id"], order, k, rank_col="_rn").drop("_rn")
+
+
+def _nearest_probes(probe_scored: DataFrame, n_probe: int) -> DataFrame:
+    """The ``n_probe`` nearest centroids per query (``_d`` asc, cid
+    tiebreak) — the IVF probe set."""
+    order = [F.col("_d").asc(), F.col("cid").asc()]
+    return grouped_topk(probe_scored, ["query_id"], order, n_probe, rank_col="_rn")
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -81,14 +97,7 @@ def brute_force_topk(
         "neighbor_id",
         F.round(V.cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _per_query_topk(scored, "cos_sim", k)
 
 
 def lsh_bucketed_topk(
@@ -135,14 +144,7 @@ def lsh_bucketed_topk(
             F.round(V.cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _per_query_topk(scored, "cos_sim", k)
 
 
 def ivf_centroids(
@@ -158,13 +160,13 @@ def ivf_centroids(
     production recall, refine with :func:`ivf_refine` (Lloyd steps) —
     the query path is identical either way.
     """
-    w = Window.partitionBy(F.col(id_col) % n_centroids).orderBy(F.col(id_col))
-    return (
-        corpus.select(F.col(id_col), V.to_double(F.col(vec_col)).alias("cvec"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select((F.col(id_col) % n_centroids).alias("cid"), "cvec")
-    )
+    return grouped_topk(
+        corpus.select(F.col(id_col), V.to_double(F.col(vec_col)).alias("cvec")),
+        [F.col(id_col) % n_centroids],
+        [F.col(id_col)],
+        1,
+        rank_col="_rn",
+    ).select((F.col(id_col) % n_centroids).alias("cid"), "cvec")
 
 
 def ivf_refine(
@@ -270,12 +272,7 @@ def ivf_topk(
     assigned = ivf_assign(corpus, cent, id_col, vec_col).withColumnRenamed(id_col, "neighbor_id")
     q = queries.select(F.col(id_col).alias("query_id"), V.to_double(F.col(vec_col)).alias("qv"))
     probe_scored = q.crossJoin(F.broadcast(cent)).withColumn("_d", V.l2sq(F.col("qv"), F.col("cvec")))
-    w = Window.partitionBy("query_id").orderBy(F.col("_d").asc(), F.col("cid").asc())
-    probe = (
-        probe_scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "qv", "cid")
-    )
+    probe = _nearest_probes(probe_scored, n_probe).select("query_id", "qv", "cid")
     scored = (
         assigned.join(F.broadcast(probe), "cid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -285,8 +282,7 @@ def ivf_topk(
             F.round(V.cosine(F.col("qv"), F.col("_v")), 6).alias("cos_sim"),
         )
     )
-    wk = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("_rn", F.row_number().over(wk)).filter(F.col("_rn") <= k).drop("_rn")
+    return _per_query_topk(scored, "cos_sim", k)
 
 
 def embedding_near_dups(
@@ -301,8 +297,9 @@ def embedding_near_dups(
     (OR-of-ANDs), cosine-verified. Output: ``id_a, id_b, cos_sim``.
 
     Candidate generation is an equi-join of the banded-signature frame
-    with itself on (band, sig) — the same bounded-bucket structure as
-    MinHash text dedup (operators/dedup.py). With 16 planes per band
+    with itself on the (band, sig) struct — MinHash text dedup's own
+    join (:func:`~stepist_spark.operators.dedup.candidates_from_banded`)
+    over the same bounded-bucket structure. With 16 planes per band
     the per-band signature space is 2^16, so bucket population on a
     near-orthogonal corpus is ~N/65536 per band — the within-bucket
     pair count stays linear-ish instead of (N/256)² as with a single
@@ -315,21 +312,12 @@ def embedding_near_dups(
     c = corpus.select(
         F.col(id_col).alias("_id"), V.to_double(F.col(vec_col)).alias("_v")
     )
-    banded = lsh_band_signatures(
-        corpus, id_col, vec_col, n_bands, planes_per_band
-    ).localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
+    banded = (
+        lsh_band_signatures(corpus, id_col, vec_col, n_bands, planes_per_band)
+        .select("_id", F.struct("band", "sig").alias("bk"))
+        .localCheckpoint(eager=False)
     )
+    cands = candidates_from_banded(banded)
     va = c.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"))
     vb = c.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"))
     return (
@@ -586,14 +574,7 @@ def pq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("partial") / F.lit(1e6), 6).alias("adc_dot"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _per_query_topk(scored, "adc_dot", k)
 
 
 def ivf_pq_topk(
@@ -632,12 +613,7 @@ def ivf_pq_topk(
     probe_scored = q.crossJoin(F.broadcast(cent)).withColumn(
         "_d", V.l2sq(F.col("qv"), F.col("cvec"))
     )
-    wp = Window.partitionBy("query_id").orderBy(F.col("_d").asc(), F.col("cid").asc())
-    probe = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "cid")
-    )
+    probe = _nearest_probes(probe_scored, n_probe).select("query_id", "cid")
     d_expr = F.size(F.col("qv")) / n_subspaces
     table = (
         q.crossJoin(F.broadcast(book))
@@ -677,14 +653,7 @@ def ivf_pq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("partial") / F.lit(1e6), 6).alias("adc_dot"))
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(wk))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _per_query_topk(scored, "adc_dot", k)
 
 
 def quantize_int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -784,14 +753,7 @@ def hard_negatives(
             F.round(V.cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _per_query_topk(scored, "cos_sim", k)
 
 
 def truncated_topk(
@@ -1024,13 +986,12 @@ def jl_topk(
         "aggregate(zip_with(qp, cp, (a, b) -> a * b), CAST(0 AS BIGINT), (s, p) -> s + p)"
     )
     scored = pairs.select("query_id", "neighbor_id", dot.alias("dot_scaled"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_scaled").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot_scaled")
+    order = [F.col("dot_scaled").desc(), F.col("neighbor_id").asc()]
+    return grouped_topk(scored, ["query_id"], order, k, rank_col="rank").select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("bigint").alias("rank"),
+        "dot_scaled",
     )
 
 
@@ -1125,14 +1086,7 @@ def rerank_exact(
         "neighbor_id",
         F.round(V.cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _per_query_topk(scored, "cos_sim", k)
 
 
 def mutual_margin_pairs(topk: DataFrame, scale: int = 1_000_000) -> DataFrame:

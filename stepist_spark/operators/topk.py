@@ -24,16 +24,26 @@ def global_topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
 
 def grouped_topk(
     df: DataFrame,
-    group_cols: Sequence[str],
+    group_cols: Sequence[str | Column],
     order: Sequence[Column],
-    k: int,
+    k: int | Column,
     rank_col: str = "rn",
 ) -> DataFrame:
+    """The library's one rank-and-cut: number each group's rows by
+    ``order`` (1-based) into ``rank_col`` and keep ranks ``<= k``.
+
+    ``group_cols`` may be expressions (``md5(text)``, ``id % n``); ``k``
+    may be a per-row column (a set's own prefix length). The rank stays
+    ``int`` through the cut: an int ``k`` against the bare window
+    output lets Spark plan a WindowGroupLimit below the sort-shuffle,
+    which a cast rank would hide — cast after the cut.
+    """
     group_cols = require_groups(
         group_cols, "grouped_topk", "use global_topk (TakeOrderedAndProject)"
     )
     w = Window.partitionBy(*group_cols).orderBy(*order)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )
+    rank = F.col(rank_col)
+    # a single-winner pick filters "= 1": Catalyst infers the same
+    # WindowGroupLimit from either form, and the plan reads as a pick
+    keep = rank == 1 if isinstance(k, int) and k == 1 else rank <= k
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(keep)

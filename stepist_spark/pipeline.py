@@ -302,6 +302,11 @@ class Pipeline:
             self.add(s)
 
     def add(self, fn: Callable[[DataFrame], DataFrame], name: str | None = None) -> "Pipeline":
+        """Append a stage. A :class:`Step` applies only its
+        transformation (no routing) and keeps its own name; any other
+        callable is named by ``name`` or its ``__name__``."""
+        if isinstance(fn, Step):
+            name, fn = name or fn.name, fn.transform
         self.stages.append((name or getattr(fn, "__name__", f"stage{len(self.stages)}"), fn))
         return self
 
@@ -310,7 +315,7 @@ class Pipeline:
 
     def run(self, df: DataFrame) -> DataFrame:
         for _, fn in self.stages:
-            df = fn.transform(df) if isinstance(fn, Step) else fn(df)
+            df = fn(df)
             if not isinstance(df, DataFrame):
                 raise TypeError("pipeline stage must return a DataFrame")
         return df

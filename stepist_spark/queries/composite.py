@@ -1013,9 +1013,8 @@ C01_SQL = _c01_sql()
 # among its 5 exact nearest neighbors (deterministic tiebreak: highest
 # vote count, then smallest label) — the end-use shape of the ANN path.
 def c02_knn_label_vote(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from stepist_spark.operators import similarity
+    from stepist_spark.operators.topk import grouped_topk
 
     emb = load_table(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
@@ -1024,11 +1023,9 @@ def c02_knn_label_vote(spark: SparkSession, sf: str) -> DataFrame:
         emb.select(F.col("vec_id").alias("neighbor_id"), "label"), "neighbor_id"
     )
     votes = labeled.groupBy("query_id", "label").agg(F.count(F.lit(1)).alias("votes"))
-    w = Window.partitionBy("query_id").orderBy(F.col("votes").desc(), F.col("label").asc())
-    return (
-        votes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("query_id", F.col("label").alias("predicted_label"), "votes")
+    order = [F.col("votes").desc(), F.col("label").asc()]
+    return grouped_topk(votes, ["query_id"], order, 1, rank_col="_rn").select(
+        "query_id", F.col("label").alias("predicted_label"), "votes"
     )
 
 

@@ -339,13 +339,12 @@ def t08_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
             ),
         ).localCheckpoint()
 
-    # ppjoin rides the SAME hashed element universe: its flat (_sid, _h)
-    # element table is an explode of the checkpointed hashed sets — no
-    # second tokenize→shingle→hash→distinct pass
+    # ppjoin rides the SAME hashed element universe: it reads the
+    # checkpointed hashed sets (one row per doc) — no second
+    # tokenize→shingle→hash→distinct pass
     def _ppjoin(sh):
         return sh, dedup.set_similarity_join(
-            corpus, "doc_id", "text", t_num=1, t_den=2, shingle_k=3,
-            elems=sh.select("_sid", F.explode("_set").alias("_h")),
+            corpus, "doc_id", "text", t_num=1, t_den=2, shingle_k=3, sets=sh
         )
 
     (sig16, banded8, cands), (sh_sets, pp_verified) = build_concurrently(

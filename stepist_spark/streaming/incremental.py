@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from stepist_spark.operators.topk import grouped_topk
 from stepist_spark.sources.writers import write_stream
 
 # error conditions of a history read that mean "nothing ingested yet"
@@ -53,12 +54,7 @@ def dedup_against_history(
     def ingest(batch: DataFrame, epoch_id: int) -> None:
         hashed = batch.withColumn("_h", F.md5(F.col(text_col)))
         # in-batch dedup: min id wins (deterministic)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_h").orderBy(F.col(id_col))
-        hashed = hashed.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") == 1
-        ).drop("_rn")
+        hashed = grouped_topk(hashed, ["_h"], [F.col(id_col)], 1, rank_col="_rn").drop("_rn")
         # probe history through Spark, not the driver's local filesystem
         # — history_dir may be s3://-style storage where os.path never
         # matches. Only "no history yet" (missing or empty directory:

@@ -199,6 +199,8 @@ class StreamFlow:
                 f"one of {sorted(STATE_STORE_PROVIDERS)}"
             )
         self.source = source
+        if pipeline is not None and not isinstance(pipeline, Pipeline):
+            pipeline = Pipeline([pipeline])
         self.pipeline = pipeline
         self.state_store = state_store
         self._query: StreamingQuery | None = None
@@ -210,14 +212,7 @@ class StreamFlow:
             return writer()
 
     def _transformed(self) -> DataFrame:
-        p = self.pipeline
-        if p is None:
-            return self.source
-        if isinstance(p, Pipeline):
-            return p.run(self.source)
-        if isinstance(p, Step):
-            return p.transform(self.source)
-        return p(self.source)
+        return self.source if self.pipeline is None else self.pipeline.run(self.source)
 
     # -- sinks ------------------------------------------------------------
     def to_memory(

@@ -40,6 +40,22 @@ def test_step_monitor_with_step_objects(spark):
     assert mon.stats()["head5"]["rows_out"] == 5
 
 
+def test_steps_keep_their_own_names(spark):
+    # two lambda Steps share the __name__ "<lambda>"; each stage must be
+    # named, and counted, by its Step's name
+    pipe = Pipeline(
+        [
+            Step(lambda d: d.filter(F.col("id") < 30), name="a"),
+            Step(lambda d: d.filter(F.col("id") < 7), name="b"),
+        ]
+    )
+    mon = StepMonitor()
+    mon.instrument(pipe).run(spark.range(50)).collect()
+    s = mon.stats()
+    assert set(s) == {"a", "b"}
+    assert (s["a"]["rows_out"], s["b"]["rows_out"]) == (30, 7)
+
+
 def test_monitor_adds_no_extra_jobs(spark):
     """observe() metrics ride the existing action: the instrumented run
     must not launch more jobs than the plain run."""

@@ -190,3 +190,34 @@ class TestDrainInOnePlace:
     def test_sinks_start_only_in_writers_and_runtime(self):
         sites = self._attribute_sites("writeStream")
         assert sites["writeStream"] == {"sources/writers.py", "streaming/runtime.py"}
+
+
+class TestRankInOnePlace:
+    def test_ranks_are_cut_only_in_grouped_topk(self):
+        # operators.topk.grouped_topk is the one rank-and-cut: a chain
+        # written out elsewhere drifts in tiebreak and in the rank's type
+        # (a cast rank hides the cut from Spark's WindowGroupLimit). Flags
+        # .filter/.where called directly on a .withColumn(name, expr)
+        # whose expr contains row_number
+        pkg = pathlib.Path(stepist_spark.__file__).parent
+        sites = []
+        for path in sorted(pkg.rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                inner = getattr(node, "func", None)
+                if not (
+                    isinstance(inner, ast.Attribute) and inner.attr in ("filter", "where")
+                ):
+                    continue
+                wc = inner.value
+                if (
+                    isinstance(wc, ast.Call)
+                    and isinstance(wc.func, ast.Attribute)
+                    and wc.func.attr == "withColumn"
+                    and len(wc.args) >= 2
+                    and any(
+                        getattr(n, "attr", getattr(n, "id", None)) == "row_number"
+                        for n in ast.walk(wc.args[1])
+                    )
+                ):
+                    sites.append(f"{path.relative_to(pkg)}:{node.lineno}")
+        assert [s.split(":")[0] for s in sites] == ["operators/topk.py"], sites

@@ -73,10 +73,10 @@ class TestSetSimilarityJoin:
         # doc 1 = {1..10} with element 1 repeated 15 times, doc 2 = {1..10}:
         # J = 1. Undeduped, doc 1's length reads 25 and the length filter
         # (t * 25 > 10) drops the pair
-        rows = [(1, 1)] * 15 + [(sid, h) for sid in (1, 2) for h in range(1, 11)]
-        elems = spark.createDataFrame(rows, "_sid bigint, _h bigint")
+        rows = [(1, [1] * 15 + list(range(1, 11))), (2, list(range(1, 11)))]
+        sets = spark.createDataFrame(rows, "_sid bigint, _set array<bigint>")
         got = set_similarity_join(
-            _docs(spark, ["", ""]), "doc_id", "text", 1, 2, elems=elems
+            _docs(spark, ["", ""]), "doc_id", "text", 1, 2, sets=sets
         ).collect()
         assert [tuple(r) for r in got] == [(1, 2, 1.0)]
 

@@ -74,23 +74,6 @@ class TestLSHRecall:
             assert exact_all[pair] == sim
 
 
-class TestFastBucket:
-    def test_fast_bucket_matches_fold_bucket(self, emb):
-        """The numpy matmul bucket must agree with the interpreted
-        sequential-fold bucket on the whole test corpus (they can only
-        diverge on a dot landing exactly at 0.0)."""
-        from stepist_spark.functions import vectors as V
-
-        c = emb.select("vec_id", V.to_double(F.col("embedding")).alias("_v"))
-        both = c.select(
-            "vec_id",
-            V.lsh_bucket(F.col("_v")).alias("slow"),
-            V.lsh_bucket_fast(F.col("_v")).alias("fast"),
-        )
-        mismatches = both.filter(F.col("slow") != F.col("fast")).count()
-        assert mismatches == 0
-
-
 class TestLabelCentroids:
     def test_exact_mean(self, spark):
         from stepist_spark.operators.similarity import label_centroids
